@@ -1,12 +1,13 @@
-"""Exchange-free-lane soak at 8x bench scale (robustness evidence for
+"""Exchange-free-lane soak at bench scale (robustness evidence for
 ``assume_clustered=True``).
 
-Generates an 8M-row (~14 GB raw) corpus, writes it HIVE-PARTITIONED by
-(repo, lang) — the Iceberg-table layout the lane exists for — then runs
-the durable pipeline through the zero-shuffle lane: encode_to with
-assume_clustered -> read_chunks -> decode -> multiset sha256 verify.
-Also re-runs encode_to to prove unit-granular resume composes (every
-row skipped). Prints one JSON line, cleans up.
+Generates a SOAK_ROWS-row corpus (default 8M rows, ~14 GB raw; the
+committed BENCH/soak_preclustered_r5.json ran SOAK_ROWS=2000000), writes
+it HIVE-PARTITIONED by repo — the Iceberg-table layout the lane exists
+for — then runs the durable pipeline through the zero-shuffle lane:
+encode_to with assume_clustered -> read_chunks -> decode -> multiset
+sha256 verify. Also re-runs encode_to to prove unit-granular resume
+composes (every row skipped). Prints one JSON line, cleans up.
 """
 
 import json, os, shutil, sys, time

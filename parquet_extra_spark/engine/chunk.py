@@ -7,7 +7,7 @@ self-describing dtype column plays the role of footer schema discovery,
 ExampleParquetReader.java:65-71). SURVEY.md §2.3.
 
 Stats columns (min_val/max_val/distinct_est/n_runs) drive chunk-level
-predicate pushdown (engine/pushdown.py) — the analogue of parquet-extra's
+predicate pushdown (engine/predicate.py) — the analogue of parquet-extra's
 Predicate trees evaluated against row-group statistics
 (Predicate.scala:47-183).
 """

@@ -7,7 +7,7 @@ compaction (engine/compact.py):
 
 ``delete_where(chunks, pred)`` classifies every chunk from its stats
 using the SAME sound (possible, certain) abstract interpretation the
-read path uses (engine/predicate._eval_stats):
+read path uses (engine/predicate.chunk_verdicts):
 
 * ``certain``  — every row matches the predicate: the whole chunk is
   dropped, payload never decoded;
@@ -32,39 +32,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .decoder import decode, discover_schema
 from .encoder import encode
-from .predicate import (
-    Pred,
-    _eval_stats,
-    chunk_stats_frame,
-    referenced_columns,
-    to_spark,
-)
-from .pushdown import semi_join_surviving
-
-
-def _verdicts(
-    chunks: DataFrame,
-    pred: Pred,
-    schema_cols: list[tuple[str, int, str]],
-) -> DataFrame:
-    """One metadata row per chunk: (chunk_id, __p possible, __c certain),
-    null-safe in the conservative direction (unknown -> must recheck,
-    never silently drop)."""
-    dtypes = {c: d for c, _, d in schema_cols}
-    refs = sorted(referenced_columns(pred))
-    unknown = [c for c in refs if c not in dtypes]
-    if unknown:
-        raise ValueError(f"predicate references unknown columns: {unknown}")
-    stats = chunk_stats_frame(chunks, refs)
-    from .predicate import materialize_large_isin
-
-    stats, env = materialize_large_isin(stats, pred, dtypes)
-    possible, certain = _eval_stats(pred, dtypes, env)
-    return stats.select(
-        "chunk_id",
-        F.coalesce(possible, F.lit(True)).alias("__p"),
-        F.coalesce(certain, F.lit(False)).alias("__c"),
-    )
+from .predicate import Pred, chunk_verdicts, semi_join_surviving, to_spark
 
 
 def delete_where(
@@ -85,7 +53,7 @@ def delete_where(
     """
     if schema_cols is None:
         schema_cols = discover_schema(chunks)
-    v = _verdicts(chunks, pred, schema_cols)
+    v = chunk_verdicts(chunks, pred, schema_cols)
     drop_ids = v.filter(F.col("__c")).select("chunk_id")
     touch_ids = v.filter(F.col("__p") & ~F.col("__c")).select("chunk_id")
 
@@ -111,7 +79,7 @@ def delete_stats(
     through untouched."""
     if schema_cols is None:
         schema_cols = discover_schema(chunks)
-    v = _verdicts(chunks, pred, schema_cols)
+    v = chunk_verdicts(chunks, pred, schema_cols)
     row = v.agg(
         F.count(F.lit(1)).alias("total"),
         F.sum(F.col("__c").cast("int")).alias("dropped"),

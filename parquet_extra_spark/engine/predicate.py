@@ -403,18 +403,22 @@ def to_spark(pred: Pred) -> Column:
 
 
 def _typed(col: Column, dtype: str) -> Column:
-    """Stored stats string -> comparable typed value (same rules as
-    pushdown._typed_stat; decimals compare exactly via a decimal cast)."""
+    """Stored stats string -> comparable typed value (decimals compare
+    exactly via a decimal cast, no double rounding). ``try_cast``: Catalyst
+    may evaluate these casts on chunk rows of OTHER columns before the
+    ``column`` filter drops them (common-subexpression evaluation), and
+    an ANSI cast of, say, a string stat to double would raise there;
+    stats of the column itself always parse."""
     if dtype in _NUMERIC:
-        return col.cast("double")
+        return col.try_cast("double")
     if typemap.is_decimal(dtype):
-        return col.cast(dtype)
+        return col.try_cast(dtype)
     if dtype in ("timestamp", "timestamp_ntz"):
-        return col.cast("timestamp")
+        return col.try_cast("timestamp")
     if dtype == "date":
-        return col.cast("date")
+        return col.try_cast("date")
     if dtype == "boolean":
-        return col.cast("int")  # stats store booleans as "0"/"1"
+        return col.try_cast("int")  # stats store booleans as "0"/"1"
     return col
 
 
@@ -437,6 +441,40 @@ def _stat_cols(
     mh = F.col(f"`{c}_mh`")  # membership digest; NULL = no digest
     bl = F.col(f"`{c}_bl`")  # bloom digest; NULL = no bloom
     return mn, mx, nc, nv, mh, bl
+
+
+def bloom_hit_expr(bl: Column, h: int) -> Column:
+    """True iff the per-chunk Bloom digest ADMITS canonical member hash
+    ``h`` — all k probed bits set (stats.bloom_positions is the shared
+    encode/plan contract). An unset bit proves the value absent (blooms
+    have no false negatives), so ``~bloom_hit_expr`` is a sound skip;
+    callers must keep chunks whose digest column is NULL. Pure Catalyst:
+    k element_at + bitwiseAND tests with literal positions/masks."""
+    w = stats_lib._BLOOM_BITS_PER_WORD
+    return reduce(
+        lambda a, b: a & b,
+        (
+            F.element_at(bl, p // w + 1).bitwiseAND(F.lit(1 << (p % w)))
+            != F.lit(0)
+            for p in stats_lib.bloom_positions(h)
+        ),
+    )
+
+
+def semi_join_surviving(chunks: DataFrame, surviving: DataFrame) -> DataFrame:
+    """Semi-join the full chunk rows against a surviving chunk-id set.
+
+    Deliberately NO broadcast hint: a selective predicate leaves a tiny
+    survivor set and AQE converts this to a broadcast semi-join at
+    runtime from the set's *actual* materialized size — but an
+    UNselective predicate over a 100 TB chunk table can keep billions of
+    ids, and a forced ``F.broadcast`` would collect them all to the
+    driver (OOM). Letting AQE decide gives the broadcast plan exactly
+    when it is safe and a shuffled semi-join otherwise; either way each
+    chunk's rows stay in one partition (hash on chunk_id), so
+    ``decode(colocated=True)`` stays valid downstream.
+    """
+    return chunks.join(surviving, "chunk_id", "left_semi")
 
 
 # Above this many values, IsIn stops expanding one (possible, certain)
@@ -485,35 +523,6 @@ def _isin_envelope(vals: list, dtype: str):
     except TypeError:
         pass
     return None, None
-
-
-def _isin_large(pred: IsIn, dtypes: dict[str, str]) -> tuple[Column, Column]:
-    """Expression-only fallback for a large IsIn (see _ISIN_EXPAND_MAX):
-    a [min,max] envelope — two comparisons regardless of |values| — with
-    certain=False. Sound but coarse; engine entry points (prune_chunks,
-    maintain._verdicts, chunk_isin_filter) refine it with the DATA-SHAPED
-    form instead: the value set becomes a broadcast DataFrame semi-joined
-    against the membership digests (materialize_large_isin). Per-value
-    expressions are never built — a Python-side literal per value costs
-    one py4j round trip each (measured ~100 s to merely BUILD a 100k-key
-    predicate) before Catalyst even sees the ~200k-term tree."""
-    c = pred.column
-    dtype = dtypes[c]
-    mn, mx, nc, nv, _, _ = _stat_cols(c, dtype)
-    has_non_null = nc < nv
-    vals = [v for v in pred.values if v is not None]
-    if not vals:
-        # IN (NULL, ...): a NULL list item never evaluates TRUE
-        return F.lit(False), F.lit(False)
-    possible = has_non_null
-    lo, hi = _isin_envelope(vals, dtype)
-    if lo is not None:
-        possible = (
-            possible
-            & (mn.isNull() | (mn <= _typed_value(hi, dtype)))
-            & (mx.isNull() | (mx >= _typed_value(lo, dtype)))
-        )
-    return possible, F.lit(False)
 
 
 def _large_isin_leaves(pred: Pred) -> list[IsIn]:
@@ -620,9 +629,9 @@ def _eval_stats(
 ) -> tuple[Column, Column]:
     """-> (possible, certain) boolean Columns over the wide stats frame.
 
-    ``env`` maps large IsIn leaves to pre-materialized boolean column
-    names (materialize_large_isin); leaves not in the env fall back to
-    the expression-only envelope (_isin_large, sound but coarser)."""
+    ``env`` maps every large IsIn leaf (above _ISIN_EXPAND_MAX values) to
+    its pre-materialized boolean column names (materialize_large_isin);
+    chunk_verdicts builds it."""
     if isinstance(pred, Cmp):
         mn, mx, nc, nv, mh, bl = _stat_cols(pred.column, dtypes[pred.column])
         v = _typed_value(pred.value, dtypes[pred.column])
@@ -654,8 +663,6 @@ def _eval_stats(
             # literals get h=None and fall back to min/max only.
             h = stats_lib.member_hash_for(pred.value, dtypes[pred.column])
             if h is not None:
-                from .pushdown import bloom_hit_expr
-
                 possible = possible & (
                     mh.isNull() | F.array_contains(mh, F.lit(h))
                 )
@@ -674,8 +681,6 @@ def _eval_stats(
             )
             h = stats_lib.member_hash_for(pred.value, dtypes[pred.column])
             if h is not None:
-                from .pushdown import bloom_hit_expr
-
                 # digest proves v absent -> every non-null row differs;
                 # with no nulls that's certain (strengthens NOT-pruning:
                 # possible(¬ne) = ¬certain(ne))
@@ -688,12 +693,16 @@ def _eval_stats(
             raise ValueError(pred.op)
         return possible, certain
     if isinstance(pred, IsIn):
-        if env is not None and pred in env:
+        if len(pred.values) > _ISIN_EXPAND_MAX:
             pcol, ccol = env[pred]
             return F.col(pcol), F.col(ccol)
-        if len(pred.values) > _ISIN_EXPAND_MAX:
-            return _isin_large(pred, dtypes)
-        parts = [_eval_stats(Cmp("eq", pred.column, v), dtypes) for v in pred.values]
+        # a NULL list item never evaluates TRUE, so it neither admits nor
+        # proves a row (and a NULL literal would null the whole OR)
+        parts = [
+            _eval_stats(Cmp("eq", pred.column, v), dtypes)
+            for v in pred.values
+            if v is not None
+        ]
         if not parts:
             return F.lit(False), F.lit(False)
         possible = reduce(lambda a, b: a | b, (p for p, _ in parts))
@@ -735,8 +744,6 @@ def _eval_stats(
         if dtypes[pred.column] == "string":
             hs = stats_lib.trigram_hashes(pred.value)
             if hs:
-                from .pushdown import bloom_hit_expr
-
                 tg = F.col(f"`{pred.column}_tg`")
                 for h in hs:
                     possible = possible & (tg.isNull() | bloom_hit_expr(tg, h))
@@ -764,8 +771,6 @@ def _eval_stats(
             for lit in rlike_literals(pred.pattern):
                 hs = stats_lib.trigram_hashes(lit)
                 if hs:
-                    from .pushdown import bloom_hit_expr
-
                     tg = F.col(f"`{pred.column}_tg`")
                     for h in hs:
                         possible = possible & (
@@ -793,9 +798,12 @@ def _eval_stats(
 
 
 def chunk_stats_frame(chunks: DataFrame, columns: list[str]) -> DataFrame:
-    """One row per chunk_id with (mn, mx, nc, nv, mh) per referenced column
-    — a groupBy+pivot over metadata columns only (payloads pruned from the
-    scan), one small shuffle regardless of table size."""
+    """One row per chunk_id with (mn, mx, nc, nv, mh, bl, tg) per
+    referenced column, named ``{column}_{stat}``. The chunk table holds
+    one row per (chunk, column), so a single column is a plain filter +
+    rename of its rows (no shuffle); several columns take a groupBy+pivot
+    over metadata columns only (payloads pruned from the scan), one small
+    shuffle regardless of table size."""
     for digest_col in ("member_hashes", "member_bloom", "trigram_bloom"):
         if digest_col not in chunks.columns:
             # chunk tables persisted before a digest column existed read
@@ -803,19 +811,44 @@ def chunk_stats_frame(chunks: DataFrame, columns: list[str]) -> DataFrame:
             chunks = chunks.withColumn(
                 digest_col, F.lit(None).cast("array<bigint>")
             )
+    stat_src = {
+        "mn": "min_val", "mx": "max_val", "nc": "null_count", "nv": "n_values",
+        "mh": "member_hashes", "bl": "member_bloom", "tg": "trigram_bloom",
+    }
+    if len(columns) == 1:
+        (c,) = columns
+        return chunks.filter(F.col("column") == c).select(
+            "chunk_id", *[F.col(src).alias(f"{c}_{k}") for k, src in stat_src.items()]
+        )
     return (
         chunks.filter(F.col("column").isin(columns))
         .groupBy("chunk_id")
         .pivot("column", columns)
-        .agg(
-            F.first("min_val").alias("mn"),
-            F.first("max_val").alias("mx"),
-            F.first("null_count").alias("nc"),
-            F.first("n_values").alias("nv"),
-            F.first("member_hashes").alias("mh"),
-            F.first("member_bloom").alias("bl"),
-            F.first("trigram_bloom").alias("tg"),
-        )
+        .agg(*[F.first(src).alias(k) for k, src in stat_src.items()])
+    )
+
+
+def chunk_verdicts(
+    chunks: DataFrame,
+    pred: Pred,
+    schema_cols: list[tuple[str, int, str]],
+) -> DataFrame:
+    """One metadata row per chunk: (chunk_id, __p possible, __c certain),
+    null-safe in the conservative direction (an unexpectedly NULL verdict
+    keeps the chunk and never certain-drops it). Unknown referenced
+    columns raise (ExampleReadSupport.java:88 fail-fast contract)."""
+    dtypes = {c: d for c, _, d in schema_cols}
+    refs = sorted(referenced_columns(pred))
+    unknown = [c for c in refs if c not in dtypes]
+    if unknown:
+        raise ValueError(f"predicate references unknown columns: {unknown}")
+    stats = chunk_stats_frame(chunks, refs)
+    stats, env = materialize_large_isin(stats, pred, dtypes)
+    possible, certain = _eval_stats(pred, dtypes, env)
+    return stats.select(
+        "chunk_id",
+        F.coalesce(possible, F.lit(True)).alias("__p"),
+        F.coalesce(certain, F.lit(False)).alias("__c"),
     )
 
 
@@ -825,27 +858,15 @@ def prune_chunks(
     schema_cols: list[tuple[str, int, str]] | None = None,
 ) -> DataFrame:
     """Chunk rows of chunks whose stats say the predicate is *possible* —
-    the coarse half. Unknown referenced columns raise (ExampleReadSupport
-    .java:88 fail-fast contract)."""
+    the coarse half."""
     from .decoder import discover_schema
 
     if schema_cols is None:
         schema_cols = discover_schema(chunks)
-    dtypes = {c: d for c, _, d in schema_cols}
-    refs = sorted(referenced_columns(pred))
-    unknown = [c for c in refs if c not in dtypes]
-    if unknown:
-        raise ValueError(f"predicate references unknown columns: {unknown}")
-    stats = chunk_stats_frame(chunks, refs)
-    stats, env = materialize_large_isin(stats, pred, dtypes)
-    possible, _ = _eval_stats(pred, dtypes, env)
-    # null-safe keep: an unexpectedly NULL verdict must keep the chunk
-    surviving = stats.filter(F.coalesce(possible, F.lit(True))).select("chunk_id")
+    v = chunk_verdicts(chunks, pred, schema_cols)
     # AQE-decided semi-join (no forced broadcast): an unselective predicate
-    # at 100 TB keeps billions of chunk ids — see pushdown.semi_join_surviving
-    from .pushdown import semi_join_surviving
-
-    return semi_join_surviving(chunks, surviving)
+    # at 100 TB keeps billions of chunk ids — see semi_join_surviving
+    return semi_join_surviving(chunks, v.filter("__p").select("chunk_id"))
 
 
 def filter_decode_pred(

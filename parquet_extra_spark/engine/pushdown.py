@@ -1,93 +1,51 @@
-"""Chunk-level predicate pushdown over the encoded chunk table.
+"""Single-column predicate pushdown over the encoded chunk table.
 
-The Spark-native analogue of parquet-extra's Predicate macro
-(parquet-avro Predicate.scala:47-183): a user-level comparison is
-evaluated against *chunk statistics* (min_val/max_val/null_count stored
-per chunk-column row) to skip whole chunks before any decode, then
-re-checked exactly on the decoded rows — the reference's dual
-coarse-pushdown + exact-native-recheck contract
-(Predicate.scala:10,19-27 Predicates{native, parquet}, tested
-PredicateTest.scala:206-222).
+The one-column surface of the reference's Predicate macro
+(parquet-avro Predicate.scala:47-183): a range, membership or null test
+skips whole chunks on their statistics before any decode, then the exact
+filter re-checks the decoded rows (Predicate.scala:10,19-27
+Predicates{native, parquet}, tested PredicateTest.scala:206-222).
 
-Soundness: stats filters only *skip* chunks that provably contain no
-matching row. NULL min/max (all-null chunk or truncated string max)
-means "unbounded" and the chunk is kept. The exact filter runs after
-decode, so results equal filtering the original DataFrame.
+Every function here is a thin shim: it builds the equivalent ``Pred``
+(``P.ge``/``P.le``, ``P.isin``, ``P.is_null``/``P.not_null``) and hands
+it to the one pruning compiler in engine/predicate.py, so min/max,
+membership-digest, Bloom and large-``isin`` pruning behave exactly as
+they do for any predicate tree. A ``Pred`` leaf skips all-null chunks
+(no NULL satisfies a comparison).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame
 
-from ..codecs import typemap
 from .decoder import decode, discover_schema
-
-from .predicate import _ISIN_EXPAND_MAX  # single shared threshold
-
-_NUMERIC = typemap.INT_DTYPES | typemap.FLOAT_DTYPES
-
-
-def _typed_stat(col: Column, dtype: str) -> Column:
-    """Cast a stored stats string back to a comparable type."""
-    if dtype in _NUMERIC:
-        return col.cast("double")
-    if typemap.is_decimal(dtype):
-        return col.cast(dtype)  # exact decimal comparison, no double rounding
-    if dtype in ("timestamp", "timestamp_ntz"):
-        return col.cast("timestamp")
-    if dtype == "date":
-        return col.cast("date")
-    if dtype == "boolean":
-        return col.cast("int")  # stats store booleans as "0"/"1"
-    return col  # strings compare lexically
+from .predicate import (
+    P,
+    Pred,
+    filter_decode_pred,
+    prune_chunks,
+    pushdown_stats_pred,
+)
 
 
-def _typed_bound(v, dtype: str):
-    """Bound literal matching _typed_stat's comparison domain. Booleans
-    become 0/1 (a bare True literal would string-compare as "true" and
-    silently mis-prune)."""
-    if dtype == "boolean" and isinstance(v, bool):
-        return F.lit(int(v))
-    return F.lit(v)
+def _checked(
+    chunks: DataFrame, column: str, schema_cols: list | None
+) -> list[tuple[str, int, str]]:
+    """Schema of ``chunks``; an unknown column raises (a typo would
+    otherwise prune every chunk and return an empty result)."""
+    if schema_cols is None:
+        schema_cols = discover_schema(chunks)
+    if column not in {c for c, _, _ in schema_cols}:
+        raise ValueError(f"unknown column {column!r}")
+    return schema_cols
 
 
-def bloom_hit_expr(bl: Column, h: int) -> Column:
-    """True iff the per-chunk Bloom digest ADMITS canonical member hash
-    ``h`` — all k probed bits set (stats.bloom_positions is the shared
-    encode/plan contract). An unset bit proves the value absent (blooms
-    have no false negatives), so ``~bloom_hit_expr`` is a sound skip;
-    callers must keep chunks whose digest column is NULL. Pure Catalyst:
-    k element_at + bitwiseAND tests with literal positions/masks."""
-    from functools import reduce
-
-    from .stats import _BLOOM_BITS_PER_WORD, bloom_positions
-
-    return reduce(
-        lambda a, b: a & b,
-        (
-            F.element_at(bl, p // _BLOOM_BITS_PER_WORD + 1).bitwiseAND(
-                F.lit(1 << (p % _BLOOM_BITS_PER_WORD))
-            )
-            != F.lit(0)
-            for p in bloom_positions(h)
-        ),
-    )
-
-
-def semi_join_surviving(chunks: DataFrame, surviving: DataFrame) -> DataFrame:
-    """Semi-join the full chunk rows against a surviving chunk-id set.
-
-    Deliberately NO broadcast hint: a selective predicate leaves a tiny
-    survivor set and AQE converts this to a broadcast semi-join at
-    runtime from the set's *actual* materialized size — but an
-    UNselective predicate over a 100 TB chunk table can keep billions of
-    ids, and a forced ``F.broadcast`` would collect them all to the
-    driver (OOM). Letting AQE decide gives the broadcast plan exactly
-    when it is safe and a shuffled semi-join otherwise; either way each
-    chunk's rows stay in one partition (hash on chunk_id), so
-    ``decode(colocated=True)`` stays valid downstream.
-    """
-    return chunks.join(surviving, "chunk_id", "left_semi")
+def _range(column: str, lower, upper) -> Pred | None:
+    """``lower <= column <= upper``; None when both bounds are open, as
+    no ``Pred`` means "true"."""
+    parts = [P.ge(column, lower)] if lower is not None else []
+    parts += [P.le(column, upper)] if upper is not None else []
+    return P.and_(*parts) if parts else None
 
 
 def chunk_range_filter(
@@ -97,142 +55,24 @@ def chunk_range_filter(
     upper=None,
     dtype: str | None = None,
 ) -> DataFrame:
-    """Keep only chunks whose [min,max] interval may intersect
-    [lower, upper] on `column`. Either bound may be None (unbounded).
-
-    Returns the *full* chunk rows (all columns) of surviving chunks —
-    an AQE-decided semi-join on chunk_id (see semi_join_surviving).
-    """
-    if dtype is None:
-        dtype = dict(
-            (c, d) for c, _, d in discover_schema(chunks)
-        ).get(column)
-        if dtype is None:
-            raise ValueError(f"unknown column {column!r}")
-    stat_rows = chunks.filter(F.col("column") == column)
-    mn = _typed_stat(F.col("min_val"), dtype)
-    mx = _typed_stat(F.col("max_val"), dtype)
-    keep = F.lit(True)
-    if lower is not None:
-        # chunk max < lower → provably no match; NULL max = unbounded → keep
-        keep = keep & (mx.isNull() | (mx >= _typed_bound(lower, dtype)))
-    if upper is not None:
-        keep = keep & (mn.isNull() | (mn <= _typed_bound(upper, dtype)))
-    surviving = stat_rows.filter(keep).select("chunk_id")
-    return semi_join_surviving(chunks, surviving)
+    """Full chunk rows of chunks whose [min,max] may intersect
+    [lower, upper] on ``column``; either bound may be None (unbounded).
+    Pass ``dtype`` to skip schema discovery."""
+    schema_cols = None if dtype is None else [(column, 0, dtype)]
+    pred = _range(column, lower, upper)
+    if pred is None:  # nothing to prune on
+        _checked(chunks, column, schema_cols)
+        return chunks
+    return prune_chunks(chunks, pred, schema_cols)
 
 
 def chunk_isin_filter(
     chunks: DataFrame, column: str, values: list, dtype: str | None = None
 ) -> DataFrame:
-    """Membership pushdown (the analogue of the reference's equality
-    predicates, Predicate.scala:31-38 eq/notEq — an isin is an OR of
-    equalities): keep chunks whose [min,max] interval contains at least
-    one requested value. NULL bounds mean unbounded (kept)."""
-    if not values:
-        return chunks.limit(0)
-    if dtype is None:
-        dtype = dict((c, d) for c, _, d in discover_schema(chunks)).get(column)
-        if dtype is None:
-            raise ValueError(f"unknown column {column!r}")
-    stat_rows = chunks.filter(F.col("column") == column)
-    mn = _typed_stat(F.col("min_val"), dtype)
-    mx = _typed_stat(F.col("max_val"), dtype)
-    has_digest = "member_hashes" in chunks.columns
-    has_bloom = "member_bloom" in chunks.columns
-    if len(values) > _ISIN_EXPAND_MAX:
-        # large value sets: data-shaped pruning instead of one OR term per
-        # value — a [min,max] envelope (two comparisons) plus a digest
-        # check via broadcast semi-join of the HASHED VALUE SET as a
-        # DataFrame against the exploded member_hashes (<= 64 per chunk).
-        # Per-value expressions are never built: even constructing them
-        # costs one py4j round trip per value. Bloom digests deliberately
-        # unused here (k probes x |values|).
-        from .predicate import _isin_envelope
-        from .stats import member_hash_for
-
-        vals = [v for v in values if v is not None]
-        if not vals:
-            return chunks.limit(0)
-        keep = F.lit(True)
-        lo, hi = _isin_envelope(vals, dtype)
-        if lo is not None:
-            keep = (
-                (mn.isNull() | (mn <= _typed_bound(hi, dtype)))
-                & (mx.isNull() | (mx >= _typed_bound(lo, dtype)))
-            )
-        hs = [member_hash_for(v, dtype) for v in vals]
-        if has_digest and all(h is not None for h in hs):
-            key_df = chunks.sparkSession.createDataFrame(
-                [(int(h),) for h in sorted(set(hs))], "h bigint"
-            )
-            hit = (
-                stat_rows.select(
-                    "chunk_id", F.explode("member_hashes").alias("h")
-                )
-                .join(F.broadcast(key_df), "h", "left_semi")
-                .select("chunk_id")
-                .distinct()
-                .withColumn("__pe_dig", F.lit(True))
-            )
-            stat_rows = stat_rows.join(hit, "chunk_id", "left")
-            keep = keep & (
-                F.col("member_hashes").isNull()
-                | F.coalesce(F.col("__pe_dig"), F.lit(False))
-            )
-        surviving = stat_rows.filter(keep).select("chunk_id")
-        return semi_join_surviving(chunks, surviving)
-    any_in = None
-    for v in values:
-        vl = _typed_bound(v, dtype)
-        hit = (mn.isNull() | (mn <= vl)) & (mx.isNull() | (mx >= vl))
-        if has_digest or has_bloom:
-            # membership refinement: a small exact dictionary — or an
-            # opt-in Bloom digest at high cardinality — that provably
-            # lacks v skips the chunk even when [min,max] straddles it
-            # (engine/stats.member_hash_for; NULL digest or
-            # type-mismatched literal = min/max only, sound)
-            from .stats import member_hash_for
-
-            h = member_hash_for(v, dtype)
-            if h is not None:
-                if has_digest:
-                    hit = hit & (
-                        F.col("member_hashes").isNull()
-                        | F.array_contains("member_hashes", F.lit(h))
-                    )
-                if has_bloom:
-                    hit = hit & (
-                        F.col("member_bloom").isNull()
-                        | bloom_hit_expr(F.col("member_bloom"), h)
-                    )
-        any_in = hit if any_in is None else (any_in | hit)
-    surviving = stat_rows.filter(any_in).select("chunk_id")
-    return semi_join_surviving(chunks, surviving)
-
-
-def filter_decode_isin(
-    chunks: DataFrame,
-    column: str,
-    values: list,
-    columns: list[str] | None = None,
-    schema_cols: list[tuple[str, int, str]] | None = None,
-    colocated: bool = False,
-) -> DataFrame:
-    """Two-phase membership decode: chunk min/max skip + exact isin
-    re-check after decode (O16 dual contract)."""
-    if schema_cols is None:
-        schema_cols = discover_schema(chunks)
-    schema = {c: d for c, _, d in schema_cols}
-    if column not in schema:
-        raise ValueError(f"unknown column {column!r}")
-    pruned = chunk_isin_filter(chunks, column, values, schema[column])
-    need = columns if columns is None else sorted(set(columns) | {column})
-    out = decode(pruned, columns=need, schema_cols=schema_cols, colocated=colocated)
-    out = out.filter(F.col(f"`{column}`").isin(values))
-    if columns is not None and column not in columns:
-        out = out.select(*[F.col(f"`{c}`") for c in columns])
-    return out
+    """Membership pushdown (an isin is an OR of the reference's equality
+    predicates, Predicate.scala:31-38)."""
+    schema_cols = None if dtype is None else [(column, 0, dtype)]
+    return prune_chunks(chunks, P.isin(column, values), schema_cols)
 
 
 def chunk_null_filter(
@@ -241,51 +81,11 @@ def chunk_null_filter(
     want_null: bool,
     schema_cols: list[tuple[str, int, str]] | None = None,
 ) -> DataFrame:
-    """Null-ness pushdown — the encoded-chunk analogue of the reference's
-    null-literal predicates (Predicate.scala:120-127 `eq(col, null)` =
-    is-null, tested PredicateTest.scala:76-100). Uses the per-chunk
-    null_count stat: is-null skips chunks with zero nulls; is-not-null
-    skips chunks that are entirely null (null_count == n_values).
-
-    Unknown columns raise (a typo would otherwise silently prune every
-    chunk and return an empty result)."""
-    if schema_cols is None:
-        schema_cols = discover_schema(chunks)
-    if column not in {c for c, _, _ in schema_cols}:
-        raise ValueError(f"unknown column {column!r}")
-    stat_rows = chunks.filter(F.col("column") == column)
-    if want_null:
-        keep = F.col("null_count") > 0
-    else:
-        keep = F.col("null_count") < F.col("n_values")
-    surviving = stat_rows.filter(keep).select("chunk_id")
-    return semi_join_surviving(chunks, surviving)
-
-
-def filter_decode_null(
-    chunks: DataFrame,
-    column: str,
-    want_null: bool = True,
-    columns: list[str] | None = None,
-    schema_cols: list[tuple[str, int, str]] | None = None,
-    colocated: bool = False,
-) -> DataFrame:
-    """Two-phase null-predicate decode: chunk null_count skip (coarse) +
-    exact isNull/isNotNull re-check after decode (O16 dual contract)."""
-    if schema_cols is None:
-        schema_cols = discover_schema(chunks)
-    if column not in {c for c, _, _ in schema_cols}:
-        raise ValueError(f"unknown column {column!r}")
-    pruned = chunk_null_filter(chunks, column, want_null, schema_cols)
-    need = columns if columns is None else sorted(set(columns) | {column})
-    out = decode(pruned, columns=need, schema_cols=schema_cols, colocated=colocated)
-    cond = (
-        F.col(f"`{column}`").isNull() if want_null else F.col(f"`{column}`").isNotNull()
-    )
-    out = out.filter(cond)
-    if columns is not None and column not in columns:
-        out = out.select(*[F.col(f"`{c}`") for c in columns])
-    return out
+    """Null-ness pushdown (the reference's null literals,
+    Predicate.scala:120-127): is-null skips chunks with no nulls,
+    is-not-null skips all-null chunks."""
+    pred = P.is_null(column) if want_null else P.not_null(column)
+    return prune_chunks(chunks, pred, schema_cols)
 
 
 def filter_decode(
@@ -297,35 +97,50 @@ def filter_decode(
     schema_cols: list[tuple[str, int, str]] | None = None,
     colocated: bool = False,
 ) -> DataFrame:
-    """Two-phase filtered decode: chunk-stats skip (coarse) + exact
-    row-level re-check after decode — O16's dual-predicate model."""
-    if schema_cols is None:
-        schema_cols = discover_schema(chunks)
-    schema = {c: d for c, _, d in schema_cols}
-    if column not in schema:
-        raise ValueError(f"unknown column {column!r}")
-    pruned = chunk_range_filter(chunks, column, lower, upper, schema[column])
-    need = columns if columns is None else sorted(set(columns) | {column})
-    out = decode(pruned, columns=need, schema_cols=schema_cols, colocated=colocated)
-    cond = F.lit(True)
-    if lower is not None:
-        cond = cond & (F.col(f"`{column}`") >= F.lit(lower))
-    if upper is not None:
-        cond = cond & (F.col(f"`{column}`") <= F.lit(upper))
-    out = out.filter(cond)
-    if columns is not None and column not in columns:
-        out = out.select(*[F.col(f"`{c}`") for c in columns])
-    return out
+    """Two-phase range decode: chunk-stats skip + exact row recheck. With
+    both bounds None every row returns, NULLs included."""
+    pred = _range(column, lower, upper)
+    if pred is None:  # no prune and no filter
+        schema_cols = _checked(chunks, column, schema_cols)
+        return decode(
+            chunks, columns=columns, schema_cols=schema_cols, colocated=colocated
+        )
+    return filter_decode_pred(chunks, pred, columns, schema_cols, colocated)
+
+
+def filter_decode_isin(
+    chunks: DataFrame,
+    column: str,
+    values: list,
+    columns: list[str] | None = None,
+    schema_cols: list[tuple[str, int, str]] | None = None,
+    colocated: bool = False,
+) -> DataFrame:
+    """Two-phase membership decode: chunk-stats skip + exact isin recheck."""
+    return filter_decode_pred(
+        chunks, P.isin(column, values), columns, schema_cols, colocated
+    )
+
+
+def filter_decode_null(
+    chunks: DataFrame,
+    column: str,
+    want_null: bool = True,
+    columns: list[str] | None = None,
+    schema_cols: list[tuple[str, int, str]] | None = None,
+    colocated: bool = False,
+) -> DataFrame:
+    """Two-phase null decode: null_count skip + exact isNull/isNotNull
+    recheck."""
+    pred = P.is_null(column) if want_null else P.not_null(column)
+    return filter_decode_pred(chunks, pred, columns, schema_cols, colocated)
 
 
 def pushdown_stats(chunks: DataFrame, column: str, lower=None, upper=None) -> dict:
-    """Report pruning effectiveness: chunks total vs surviving (for tests
-    and EXPLAIN-style introspection)."""
-    total = chunks.select("chunk_id").distinct().count()
-    kept = (
-        chunk_range_filter(chunks, column, lower, upper)
-        .select("chunk_id")
-        .distinct()
-        .count()
-    )
-    return {"chunks_total": total, "chunks_kept": kept, "chunks_skipped": total - kept}
+    """Pruning effectiveness of a range: chunks total vs surviving."""
+    pred = _range(column, lower, upper)
+    if pred is None:
+        _checked(chunks, column, None)
+        n = chunks.select("chunk_id").distinct().count()
+        return {"chunks_total": n, "chunks_kept": n, "chunks_skipped": 0}
+    return pushdown_stats_pred(chunks, pred)

@@ -14,8 +14,8 @@ Predicate.scala:19-27, applied to an ordering instead of a filter):
    and read its k-th best value v_k. The k-th best of any subset with
    >= k values bounds the global k-th best from the weak side, so:
 3. **Prune** — every chunk whose stat bound is strictly worse than v_k
-   provably contributes nothing to the global top k
-   (chunk_range_filter). Decode the survivors, filter to the v_k
+   provably contributes nothing to the global top k (a one-sided
+   ``P.ge``/``P.le`` prune). Decode the survivors, filter to the v_k
    boundary, order, limit k.
 
 At 100 TB a clustered ordering column (unit_sort / Z-order ingest) makes
@@ -34,12 +34,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from .decoder import decode, discover_schema
 from .predicate import (
+    P,
     Pred,
+    _typed,
     prune_chunks,
     referenced_columns,
+    semi_join_surviving,
     to_spark,
 )
-from .pushdown import _typed_stat, chunk_range_filter, semi_join_surviving
 
 
 def topk_encoded(
@@ -89,7 +91,7 @@ def topk_encoded(
     # 1. seed: enough best-bound chunks to cover k non-null values.
     # bound NULL = unbounded (all-null chunks are excluded by nn > 0;
     # a truncated string max reads NULL) -> conservatively first.
-    bound = _typed_stat(F.col("max_val" if not ascending else "min_val"), dtype)
+    bound = _typed(F.col("max_val" if not ascending else "min_val"), dtype)
     stat_rows = (
         chunks.filter(F.col("column") == col)
         .select(
@@ -152,12 +154,8 @@ def topk_encoded(
     # 3. prune on the threshold, decode survivors, exact order + limit
     pruned = chunks
     if v_k is not None:
-        pruned = chunk_range_filter(
-            chunks,
-            col,
-            lower=None if ascending else v_k,
-            upper=v_k if ascending else None,
-            dtype=dtype,
+        pruned = prune_chunks(
+            chunks, P.le(col, v_k) if ascending else P.ge(col, v_k), schema_cols
         )
     out = decode(
         pruned, columns=need, schema_cols=schema_cols, colocated=colocated

@@ -5,7 +5,8 @@ The reference's central test property is write→read→equality
 north_rule sharpens it to per-row sha256 equality of content.
 
 Comparison is an order-insensitive **multiset equality**: every row gets
-a sha256 fingerprint over a canonical string form of its columns; the two
+a sha256 fingerprint over an injective string encoding of its columns
+(text length-prefixed, NULL a marker no value can equal); the two
 sides match iff every fingerprint occurs the same number of times in
 both. This needs no key assumption (real tables have duplicate business
 keys) and is exactly as strong as row-level equality up to ordering.
@@ -15,14 +16,42 @@ comparison path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
+
+
+# types whose string cast is never empty and never contains the separator
+_PLAIN_TYPES = (
+    T.NumericType, T.BooleanType, T.DateType, T.TimestampType, T.TimestampNTZType
+)
 
 
 def _row_fingerprint(df: DataFrame, cols: list[str]):
-    """sha256 over a canonical string form of the given columns."""
-    parts = [
-        F.coalesce(F.col(f"`{c}`").cast("string"), F.lit("\x00<null>")) for c in cols
-    ]
+    """sha256 over an injective encoding of the given columns, joined by
+    \\x1f and read back left to right in column order:
+
+    * numbers, booleans, dates and timestamps are their string cast, and
+      NULL is the empty string;
+    * every other value is text — hex of binary, JSON of arrays, maps and
+      structs (``cast`` to string is ambiguous for those), the string cast
+      of the rest — written as ``<byte length>`` then the text, or ``N``
+      for NULL, so a separator inside a value cannot shift it.
+
+    One concat_ws per row copies each value once (it skips the NULL text
+    itself), keeping the single sha2 per row."""
+    types = {f.name: f.dataType for f in df.schema.fields}
+    parts = []
+    for c in cols:
+        col, dt = F.col(f"`{c}`"), types[c]
+        if isinstance(dt, _PLAIN_TYPES):
+            parts.append(F.coalesce(col.cast("string"), F.lit("")))
+            continue
+        if isinstance(dt, T.BinaryType):
+            text = F.hex(col)
+        elif isinstance(dt, (T.ArrayType, T.MapType, T.StructType)):
+            text = F.to_json(col)
+        else:
+            text = col.cast("string")
+        parts += [F.coalesce(F.octet_length(text).cast("string"), F.lit("N")), text]
     return F.sha2(F.concat_ws("\x1f", *parts), 256)
 
 

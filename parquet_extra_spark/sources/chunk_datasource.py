@@ -18,7 +18,7 @@ LIKE-'p%' prefix matches as the [p, successor(p)) range) onto the
 engine's chunk-statistics interpretation, and RETURNS every filter as
 unsupported — Spark re-applies them exactly on the decoded rows, so the
 source only ever uses them to SKIP chunks (sound over-approximation, the
-same dual-predicate discipline as engine/pushdown.py; ≙ the reference's
+same dual-predicate discipline as engine/predicate.py; ≙ the reference's
 coarse-filter + exact-recheck contract, Predicate.scala:47-183).
 
 **Planning is metadata-only on the checkpoint layout.** Schema comes

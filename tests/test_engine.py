@@ -39,6 +39,22 @@ def test_corpus_roundtrip(corpus, corpus_chunks):
     assert pes.roundtrip_ok(corpus, pes.decode(corpus_chunks))
 
 
+def test_roundtrip_oracle_is_injective(spark):
+    """Distinct rows never share a fingerprint: a separator byte inside a
+    value, a string spelling a NULL sentinel, and array values whose
+    string casts coincide must all register as mismatches."""
+    schema = "a string, b string"
+    src = spark.createDataFrame([("a\x1fb", "c"), (None, "x")], schema)
+    bad = spark.createDataFrame([("a", "b\x1fc"), ("\x00<null>", "x")], schema)
+    assert pes.roundtrip_ok(src, src)
+    assert not pes.roundtrip_ok(src, bad)
+    arr = "a array<string>"
+    assert not pes.roundtrip_ok(
+        spark.createDataFrame([(["x, y"],)], arr),
+        spark.createDataFrame([(["x", "y"],)], arr),
+    )
+
+
 def test_sha256_roundtrip_per_row(spark, corpus, corpus_chunks):
     """north_rule invariant: every decoded content sha256-identical,
     verified per row via join on (repo, path, commit)."""
@@ -109,6 +125,9 @@ def test_pushdown_prunes_and_matches(spark, corpus, corpus_chunks):
     st = pes.pushdown_stats(corpus_chunks, "lang", "zz", None)
     assert st["chunks_kept"] == 0  # nothing sorts >= 'zz'
     assert st["chunks_skipped"] == st["chunks_total"]
+    assert pes.pushdown_stats(corpus_chunks, "lang", "go", "py") == (
+        pes.pushdown_stats_pred(corpus_chunks, pes.P.ge("lang", "go") & pes.P.le("lang", "py"))
+    )
 
 
 def test_null_pushdown_skips_and_matches(spark):
@@ -126,6 +145,8 @@ def test_null_pushdown_skips_and_matches(spark):
     # a column with no nulls anywhere: is-null must prune every chunk
     pruned = pes.chunk_null_filter(chunks, "grp", want_null=True)
     assert pruned.count() == 0
+    # no bound at all: no pruning and no filter, NULL rows included
+    assert pes.roundtrip_ok(df, pes.filter_decode(chunks, "val"))
     chunks.unpersist()
 
 
@@ -178,6 +199,14 @@ def test_isin_pushdown_prunes_and_matches(spark, corpus, corpus_chunks):
     assert pes.roundtrip_ok(expected, res)
     # empty value list -> empty result, no decode
     assert pes.chunk_isin_filter(corpus_chunks, "lang", []).count() == 0
+    # a NULL among the values never matches, in the small (per-value) and
+    # large (> 64 values, digest-joined) forms alike
+    for values in (["py", None], [f"x{i}" for i in range(70)] + ["go", None]):
+        expected = corpus.filter(F.col("lang").isin(values))
+        res = pes.filter_decode_isin(corpus_chunks, "lang", values)
+        assert pes.roundtrip_ok(expected, res)
+        kept = pes.chunk_isin_filter(corpus_chunks, "lang", values)
+        assert pes.roundtrip_ok(expected, pes.decode(kept).filter(F.col("lang").isin(values)))
 
 
 def test_chunk_table_projection_pushes_to_parquet_scan(spark, corpus, tmp_path):

@@ -3,6 +3,8 @@ Parquet scan, projection prunes columns, small joins broadcast, chunk-table
 projection filters before decode) must be visible in explain() output —
 the first thing that would silently regress at 100 TB."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -64,6 +66,24 @@ def test_pushdown_stats_filter_on_chunk_scan(spark, sf_dir, tmp_path):
     # chunk pruning is a broadcast semi-join on chunk_id — never a shuffle
     # of the payload side
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
+
+
+# the chunk-stats pivot: Spark plans groupBy("chunk_id").pivot("column")
+# as PivotFirst, or — for string/array stats — as first(if (column <=> v))
+_PIVOT = re.compile(r"pivotfirst|first\(if \(\(column#\d+ <=> ")
+
+
+def test_single_column_prune_has_no_pivot(spark):
+    """One referenced column reads its stats straight off that column's
+    chunk rows; only a multi-column predicate pays the pivot shuffle."""
+    df = spark.range(4000).select(F.col("id").alias("k"), (F.col("id") % 97).alias("m"))
+    chunks = pes.encode(df, chunk_rows=512, n_buckets=2, n_salts=1)
+    schema_cols = pes.schema_from_struct(df.schema)
+    one = plan_of(pes.prune_chunks(chunks, pes.P.ge("k", 5) & pes.P.le("k", 900), schema_cols))
+    two = plan_of(pes.prune_chunks(chunks, pes.P.ge("k", 5) & pes.P.le("m", 9), schema_cols))
+    assert not _PIVOT.search(one)
+    assert _PIVOT.search(two)
+    assert two.count("Exchange") == one.count("Exchange") + 1
 
 
 def test_encode_plan_has_single_exchange(spark):

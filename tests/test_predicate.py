@@ -399,6 +399,20 @@ def test_isin_large_set_matches_and_prunes(spark):
     assert got == values
     st = pushdown_stats_pred(chunks, pred)
     assert st["chunks_skipped"] > 0, st  # envelope pruned the k>=512 chunks
+    # the single-column shims take the same path; a NULL value never matches
+    with_null = values + [None]
+    want = sorted(r["k"] for r in df.filter(F.col("k").isin(with_null)).collect())
+    assert want == values
+    got_i = pes.filter_decode_isin(chunks, "k", with_null)
+    assert sorted(r["k"] for r in got_i.collect()) == want
+    kept = pes.chunk_isin_filter(chunks, "k", with_null)
+    assert kept.select("chunk_id").distinct().count() == st["chunks_kept"]
+    # 64 values (the expansion threshold) on a table with a string column:
+    # the numeric stat casts may run before the one-column frame's column
+    # filter, so a string stat must not make them raise
+    at_max = list(range(0, 192, 3))
+    got_m = filter_decode_pred(chunks, P.isin("k", at_max))
+    assert sorted(r["k"] for r in got_m.collect()) == at_max
 
     # digest overlap: values inside the string range but provably absent
     # from the column's exact member set still skip every chunk
