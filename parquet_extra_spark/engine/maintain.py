@@ -23,7 +23,8 @@ make retention affordable.
 Row semantics match SQL DELETE: a row is deleted iff the predicate is
 TRUE for it; FALSE and NULL rows survive. The (possible, certain)
 verdicts respect this — a chunk containing nulls in a referenced column
-is never certain-dropped by a comparison predicate (nulls don't match).
+is never certain-dropped by a comparison predicate (nulls don't match)
+or by its negation (NOT of a NULL is NULL, predicate._never_null).
 """
 
 from __future__ import annotations

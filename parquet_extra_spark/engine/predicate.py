@@ -16,7 +16,8 @@ node evaluates to a pair of boolean Columns
     certain   — "every row of this chunk DOES satisfy it"
 
 Leaves derive both from (min_val, max_val, null_count, n_values); NOT
-swaps them (possible(¬x) = ¬certain(x), certain(¬x) = ¬possible(x));
+swaps them (possible(¬x) = ¬certain(x), certain(¬x) = ¬possible(x) where
+x is never NULL on the chunk's rows, as NOT NULL is NULL — _never_null);
 AND/OR combine component-wise. A chunk is skipped iff possible is false.
 Soundness notes:
 
@@ -562,6 +563,7 @@ def materialize_large_isin(
     for i, leaf in enumerate(dict.fromkeys(_large_isin_leaves(pred))):
         c, dtype = leaf.column, dtypes[leaf.column]
         pcol, ccol = f"__pe_isin_p{i}", f"__pe_isin_c{i}"
+        # a NULL item neither admits nor proves a row (see _never_null)
         vals = [v for v in leaf.values if v is not None]
         if not vals:
             stats = stats.withColumn(pcol, F.lit(False)).withColumn(
@@ -624,8 +626,23 @@ def materialize_large_isin(
     return stats, env
 
 
+def _never_null(pred: Pred) -> Column:
+    """True where ``pred`` is never NULL on the chunk's rows: only then does
+    "no row is TRUE" (¬possible) mean "every row is FALSE", which
+    certain(¬pred) claims. Conservative — false whenever unsure."""
+    if isinstance(pred, (IsNull, NotNull)):
+        return F.lit(True)
+    if isinstance(pred, IsIn) and None in pred.values:
+        return F.lit(False)  # x IN (..., NULL) is TRUE or NULL, never FALSE
+    if isinstance(pred, (And, Or)):
+        return _never_null(pred.left) & _never_null(pred.right)
+    if isinstance(pred, Not):
+        return _never_null(pred.child)
+    return F.col(f"`{pred.column}_nc`") == F.lit(0)
+
+
 def _eval_stats(
-    pred: Pred, dtypes: dict[str, str], env: dict | None = None
+    pred: Pred, dtypes: dict[str, str], env: dict
 ) -> tuple[Column, Column]:
     """-> (possible, certain) boolean Columns over the wide stats frame.
 
@@ -697,9 +714,10 @@ def _eval_stats(
             pcol, ccol = env[pred]
             return F.col(pcol), F.col(ccol)
         # a NULL list item never evaluates TRUE, so it neither admits nor
-        # proves a row (and a NULL literal would null the whole OR)
+        # proves a row (and a NULL literal would null the whole OR); it
+        # does make non-matches NULL, not FALSE — see _never_null
         parts = [
-            _eval_stats(Cmp("eq", pred.column, v), dtypes)
+            _eval_stats(Cmp("eq", pred.column, v), dtypes, env)
             for v in pred.values
             if v is not None
         ]
@@ -793,7 +811,7 @@ def _eval_stats(
         return pl | pr, cl | cr
     if isinstance(pred, Not):
         pc, cc = _eval_stats(pred.child, dtypes, env)
-        return ~cc, ~pc
+        return ~cc, ~pc & _never_null(pred.child)
     raise TypeError(f"not a Pred: {pred!r}")
 
 

@@ -62,14 +62,33 @@ def test_delete_three_way_split_on_clustered_chunks(spark):
 
 def test_delete_null_rows_survive(spark):
     """SQL DELETE: rows where the predicate is NULL are NOT deleted, and a
-    chunk with nulls is never certain-dropped by a comparison."""
+    chunk with nulls is never certain-dropped by a comparison — nor by a
+    NOT, whose child is NULL (not FALSE) on a NULL row or, for an isin
+    holding NULL, on every non-matching row."""
     df = spark.createDataFrame(
-        [(1, 10), (2, None), (3, 30), (4, None)], "k bigint, x bigint"
+        [(1, 10, "go"), (2, None, "go"), (3, 30, None), (4, None, "go")],
+        "k bigint, x bigint, s string",
     )
     chunks = pes.encode(df, chunk_rows=4, n_buckets=1, n_salts=1)
     out = pes.delete_where(chunks, pes.P.gt("x", 0), chunk_rows=4)
     got = sorted(r["k"] for r in pes.decode(out).select("k").collect())
     assert got == [2, 4]
+    many = [f"z{i}" for i in range(70)]  # past the 64-value expansion
+    schema_cols = pes.schema_from_struct(df.schema)
+    for pred, sql in [
+        (~pes.P.gt("x", 40), ~(F.col("x") > 40)),
+        (~pes.P.isin("s", ["py", None]), ~F.col("s").isin("py", None)),
+        (~pes.P.isin("s", many + [None]), ~F.col("s").isin(*many, None)),
+    ]:
+        out = pes.delete_where(chunks, pred, chunk_rows=4)
+        got = sorted(
+            r["k"] for r in pes.decode(out, schema_cols=schema_cols).collect()
+        )
+        want = sorted(
+            r["k"] for r in df.filter(~F.coalesce(sql, F.lit(False))).collect()
+        )
+        assert got == want, pred
+        assert delete_stats(chunks, pred)["chunks_dropped"] == 0, pred
 
 
 def test_delete_unknown_column_raises(spark, docs):
