@@ -23,25 +23,42 @@ TABLES = [
 
 
 def _norm(v) -> str:
+    """Exact, type-tagged text of one value, so two values hash alike only
+    when they are the same value of the same kind: floats are their
+    unrounded ``repr`` (NaN, -0.0 and ±inf stay distinct from each other
+    and from 0.0), a Decimal keeps its scale (1.50 != 1.5), bool is not
+    int, a date is not a timestamp, and NULL has its own tag. A Spark
+    struct (Row) and a DuckDB struct (dict) both read as a name -> value
+    map."""
     import datetime
     import decimal
-    import math
 
     if v is None:
-        return "\x00"
+        return "N"
+    if isinstance(v, bool):
+        return f"b:{v}"
+    if isinstance(v, int):
+        return f"i:{v}"
     if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        return repr(round(v, 9))
+        return f"f:{v!r}"
     if isinstance(v, decimal.Decimal):
-        return str(v)
-    if isinstance(v, (datetime.datetime, datetime.date)):
-        return v.isoformat()
+        return f"d:{v}"
+    if isinstance(v, datetime.datetime):
+        return f"ts:{v.isoformat()}"
+    if isinstance(v, datetime.date):
+        return f"date:{v.isoformat()}"
+    if isinstance(v, str):
+        return f"s:{v!r}"
+    if isinstance(v, (bytes, bytearray)):
+        return f"x:{bytes(v).hex()}"
+    if hasattr(v, "asDict"):
+        v = v.asDict()
+    if isinstance(v, dict):
+        items = sorted(f"{_norm(k)}={_norm(x)}" for k, x in v.items())
+        return "{" + ",".join(items) + "}"
     if isinstance(v, (list, tuple)):
         return "[" + ",".join(_norm(x) for x in v) + "]"
-    if isinstance(v, bytes):
-        return v.hex()
-    return str(v)
+    return f"{type(v).__name__}:{v!r}"
 
 
 def value_hash(rows: list[dict], cols: list[str]) -> str:

@@ -1,9 +1,9 @@
 """Aggregation pushed into the encoded layout — compute over compressed.
 
 ``metadata_profile`` (engine/aggregates.py) answers count/min/max from
-chunk stats alone. This module goes one layer deeper: grouped counts and
-grouped sums computed from the *codec structures themselves* — dictionary
-codes and RLE runs — without materializing the column's values:
+chunk stats alone. This module goes one layer deeper: grouped aggregates
+computed from the *codec structures themselves* — dictionary codes and
+RLE runs — without materializing the column's values:
 
 * a dict-encoded chunk yields per-value counts from one ``np.bincount``
   over its (bit-unpacked) codes; the values decoded are the DICTIONARY
@@ -21,6 +21,16 @@ Catalyst finishes with an ordinary groupBy, so the shuffle carries
 ``GROUP BY lang`` over a dict/RLE-encoded column reads payload bytes
 proportional to the dictionaries, and the shuffle is ~n_chunks×distinct
 rows — both thousands of times smaller than the data.
+
+One grouped-aggregate kernel serves every GROUP BY here: _agg_partials
+(count/sum/avg/min/max over any mix of columns in one chunk pass).
+group_agg_encoded exposes it directly; group_sum/group_stats/
+group_minmax_encoded and the filtered value_counts_encoded are fixed agg
+specs over it, and the per-chunk partials of DISTINCT, COUNT(DISTINCT)
+and grouped quantiles are its groups. Every operator that pairs a
+chunk's column rows shares one per-chunk prelude (_chunk_pass: dtypes,
+stats pruning, pairing, the WHERE mask). Only the unfiltered
+value_counts/distinct stay map-only over single chunk rows.
 
 Reference anchor: the same statistics the reference's scanner derives by
 scanning raw data (ExampleScanner.java:23-89) are derived here from the
@@ -44,15 +54,6 @@ from .encoded_filter import row_mask
 from .predicate import Pred, prune_chunks, referenced_columns
 
 
-def _column_dtype(
-    chunks: DataFrame, column: str, schema_cols=None
-) -> str:
-    for c, _, d in schema_cols or discover_schema(chunks):
-        if c == column:
-            return d
-    raise ValueError(f"unknown column: {column!r}")
-
-
 def _dtype_map(
     chunks: DataFrame, needed: list[str], op: str, schema_cols=None
 ) -> tuple[dict[str, str], list[tuple[str, int, str]]]:
@@ -71,10 +72,6 @@ def _dtype_map(
     if unknown:
         raise ValueError(f"{op}: unknown columns {unknown}")
     return {c: dtypes[c] for c in needed}, schema_cols
-
-
-def _where_refs(where: Pred | None) -> list[str]:
-    return sorted(referenced_columns(where)) if where is not None else []
 
 
 def _get_codes(group: dict, c: str, dtypes: dict[str, str], cache: dict):
@@ -114,6 +111,25 @@ def _typed_dict(dict_arr: pa.Array, dtype: str) -> pa.Array:
     return dict_arr
 
 
+def _section_dict(secs: list, dict_n: int, dtype: str) -> pa.Array:
+    """The typed dictionary of an unpacked dict or rle payload (both
+    codecs keep it in sections 3 and 4)."""
+    return _typed_dict(
+        _decode_dict_values(secs[3], secs[4], dict_n, _dv_dtype(dtype)), dtype
+    )
+
+
+def _rle_runs(payload: bytes, dtype: str):
+    """-> (run code per run, run length per run, typed dictionary) of an
+    rle payload; code len(dictionary) is the null sentinel."""
+    secs = framing.unpack_sections(payload)
+    meta = json.loads(secs[0])
+    n_runs = meta["n_runs"]
+    run_vals = packing.unpack_uints(secs[1], n_runs, meta["vwidth"]).astype(np.int64)
+    run_lens = packing.unpack_uints(secs[2], n_runs, meta["lwidth"]).astype(np.int64)
+    return run_vals, run_lens, _section_dict(secs, meta["dict_n"], dtype)
+
+
 def _codes_and_dict(
     payload: bytes, dtype: str, codec: str, n_values: int
 ) -> tuple[np.ndarray, pa.Array, int]:
@@ -128,18 +144,12 @@ def _codes_and_dict(
         if meta["null_count"]:
             mask = packing.unpack_mask(secs[1], n)
             codes[mask] = dict_n
-        dict_arr = _decode_dict_values(secs[3], secs[4], dict_n, _dv_dtype(dtype))
-        return codes, _typed_dict(dict_arr, dtype), meta["null_count"]
+        return codes, _section_dict(secs, dict_n, dtype), meta["null_count"]
     if codec == "rle":
-        secs = framing.unpack_sections(payload)
-        meta = json.loads(secs[0])
-        dict_n, n_runs = meta["dict_n"], meta["n_runs"]
-        run_vals = packing.unpack_uints(secs[1], n_runs, meta["vwidth"]).astype(np.int64)
-        run_lens = packing.unpack_uints(secs[2], n_runs, meta["lwidth"]).astype(np.int64)
-        codes = np.repeat(run_vals, run_lens)  # sentinel dict_n == null
-        dict_arr = _decode_dict_values(secs[3], secs[4], dict_n, _dv_dtype(dtype))
-        null_count = int(run_lens[run_vals == dict_n].sum())
-        return codes, _typed_dict(dict_arr, dtype), null_count
+        run_vals, run_lens, dict_arr = _rle_runs(payload, dtype)
+        codes = np.repeat(run_vals, run_lens)  # sentinel len(dict) == null
+        null_count = int(run_lens[run_vals == len(dict_arr)].sum())
+        return codes, dict_arr, null_count
     arr = decode_array(payload, dtype, codec)
     enc = arr.dictionary_encode()
     dict_arr = enc.dictionary
@@ -147,19 +157,6 @@ def _codes_and_dict(
     codes = enc.indices.fill_null(0).cast(pa.int64()).to_numpy(zero_copy_only=False).copy()
     codes[mask] = len(dict_arr)
     return codes, dict_arr, int(mask.sum())
-
-
-def _rle_value_counts(payload: bytes, dtype: str) -> tuple[pa.Array, np.ndarray, int]:
-    """RLE fast path: counts from run lengths alone — codes are never
-    expanded to row scale."""
-    secs = framing.unpack_sections(payload)
-    meta = json.loads(secs[0])
-    dict_n, n_runs = meta["dict_n"], meta["n_runs"]
-    run_vals = packing.unpack_uints(secs[1], n_runs, meta["vwidth"]).astype(np.int64)
-    run_lens = packing.unpack_uints(secs[2], n_runs, meta["lwidth"]).astype(np.int64)
-    counts = np.bincount(run_vals, weights=run_lens, minlength=dict_n + 1).astype(np.int64)
-    dict_arr = _decode_dict_values(secs[3], secs[4], dict_n, _dv_dtype(dtype))
-    return _typed_dict(dict_arr, dtype), counts[:dict_n], int(counts[dict_n])
 
 
 def value_counts_encoded(
@@ -174,93 +171,47 @@ def value_counts_encoded(
     (value:<column dtype>, cnt:bigint); a null group appears when the
     column has nulls — exactly SQL GROUP BY semantics.
 
-    ``where`` adds a pushed WHERE clause: chunk-stat pruning first, then
-    the dictionary-domain exact recheck (engine/encoded_filter) masks
-    rows before counting. The filtered form pairs the target column with
-    the predicate's columns per chunk (_pair_work; ``colocated=True``
-    skips its repartition); without ``where`` the operator stays map-only
-    over single chunk rows and ``colocated`` is irrelevant."""
+    ``where`` adds a pushed WHERE clause: the filtered form is the
+    grouped-aggregate kernel with ``count(*)`` as its one aggregate
+    (_agg_partials — chunk-stat pruning, then the dictionary-domain exact
+    recheck of engine/encoded_filter masks rows before counting), which
+    pairs the target column with the predicate's columns per chunk
+    (_pair_work; ``colocated=True`` skips its repartition). Without
+    ``where`` the operator stays map-only over single chunk rows and
+    ``colocated`` is irrelevant."""
     if where is not None:
-        return _value_counts_filtered(chunks, column, where, colocated, schema_cols)
-    dtype = _column_dtype(chunks, column, schema_cols)
+        return _grouped(
+            "value_counts_encoded", chunks, [column], ["value"],
+            [("count", "*", "cnt")], colocated, where, schema_cols,
+        )
+    dtype = _dtype_map(chunks, [column], "value_counts_encoded", schema_cols)[0][column]
     out_t = typemap.spark_to_arrow(dtype)
     work = chunks.filter(F.col("column") == column).select(
         "codec", "payload", "n_values"
     )
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for i in range(batch.num_rows):
-                codec = batch.column("codec")[i].as_py()
-                payload = batch.column("payload")[i].as_py()
-                n_values = batch.column("n_values")[i].as_py()
-                if codec == "rle":
-                    dict_arr, counts, null_count = _rle_value_counts(payload, dtype)
-                else:
-                    codes, dict_arr, null_count = _codes_and_dict(
-                        payload, dtype, codec, n_values
-                    )
-                    counts = np.bincount(codes, minlength=len(dict_arr) + 1).astype(
-                        np.int64
-                    )[: len(dict_arr)]
-                values = dict_arr.cast(out_t)
-                cnts = pa.array(counts, type=pa.int64())
-                if null_count:
-                    values = pa.concat_arrays([values, pa.nulls(1, type=out_t)])
-                    cnts = pa.concat_arrays(
-                        [cnts, pa.array([null_count], type=pa.int64())]
-                    )
-                if len(values):
-                    yield pa.RecordBatch.from_arrays([values, cnts], ["value", "cnt"])
+        for codec, payload, n_values in _rows(batches, "codec", "payload", "n_values"):
+            if codec == "rle":
+                # counts from run lengths alone — codes never expand to
+                # row scale
+                codes, weights, dict_arr = _rle_runs(payload, dtype)
+            else:
+                codes, dict_arr, _ = _codes_and_dict(payload, dtype, codec, n_values)
+                weights = None
+            n = len(dict_arr)
+            counts = np.bincount(codes, weights, minlength=n + 1).astype(np.int64)
+            values = dict_arr.cast(out_t)
+            if counts[n]:  # the null group
+                values = pa.concat_arrays([values, pa.nulls(1, type=out_t)])
+            else:
+                counts = counts[:n]
+            if len(values):
+                yield pa.RecordBatch.from_arrays(
+                    [values, pa.array(counts, type=pa.int64())], ["value", "cnt"]
+                )
 
     partials = work.mapInArrow(fn, schema=f"value {dtype}, cnt bigint")
-    return partials.groupBy("value").agg(F.sum("cnt").alias("cnt"))
-
-
-def _value_counts_filtered(
-    chunks: DataFrame, column: str, where: Pred, colocated: bool,
-    schema_cols=None,
-) -> DataFrame:
-    """value_counts_encoded's WHERE form: prune chunks on stats, then
-    per chunk mask the codes through the dictionary-domain verdict and
-    bincount the survivors — the counted column still materializes only
-    its dictionary."""
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, [column] + refs, "value_counts_encoded", schema_cols
-    )
-    dtype = dtypes[column]
-    out_t = typemap.spark_to_arrow(dtype)
-    pruned = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(pruned, [column] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in {column, *refs} if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " value_counts_encoded needs the counted column and every"
-                " WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        codes, dict_arr, _ = _get_codes(group, column, dtypes, cache)
-        n = len(dict_arr)
-        counts = np.bincount(codes[mask], minlength=n + 1).astype(np.int64)
-        keep = counts[:n] > 0
-        values = dict_arr.cast(out_t).filter(pa.array(keep))
-        cnts = pa.array(counts[:n][keep], type=pa.int64())
-        if counts[n]:
-            values = pa.concat_arrays([values, pa.nulls(1, type=out_t)])
-            cnts = pa.concat_arrays([cnts, pa.array([counts[n]], type=pa.int64())])
-        if not len(values):
-            return None
-        return pa.RecordBatch.from_arrays([values, cnts], ["value", "cnt"])
-
-    partials = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=f"value {dtype}, cnt bigint",
-    )
     return partials.groupBy("value").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -278,11 +229,12 @@ def distinct_encoded(
     never expand to row scale. Other codecs decode once and unique
     chunk-locally. The shuffle then carries per-chunk distinct values
     (dictionary scale), and a Catalyst distinct finishes. Output column:
-    (value:<column dtype>). With ``where``, chunks are stats-pruned and
-    rows masked in the dictionary domain first (a code must survive the
-    mask for its value to count as present); ``colocated`` then applies
-    to the per-chunk column pairing (_pair_work) and is irrelevant
-    without ``where`` (the unfiltered path is map-only).
+    (value:<column dtype>). With ``where`` the single column takes the
+    multi-column path below: chunks are stats-pruned and rows masked in
+    the dictionary domain first (a code must survive the mask for its
+    value to count as present); ``colocated`` then applies to the
+    per-chunk column pairing (_pair_work) and is irrelevant without
+    ``where`` (the unfiltered path is map-only).
 
     A LIST of columns gives multi-column DISTINCT (``SELECT DISTINCT a,
     b``): per chunk the columns' dictionary codes stack and compact via
@@ -292,35 +244,32 @@ def distinct_encoded(
     if isinstance(column, (list, tuple)):
         return _distinct_multi(chunks, list(column), where, colocated, schema_cols)
     if where is not None:
-        return _distinct_filtered(chunks, column, where, colocated, schema_cols)
-    dtype = _column_dtype(chunks, column, schema_cols)
+        return _distinct_multi(
+            chunks, [column], where, colocated, schema_cols
+        ).withColumnRenamed(column, "value")
+    dtype = _dtype_map(chunks, [column], "distinct_encoded", schema_cols)[0][column]
     out_t = typemap.spark_to_arrow(dtype)
     work = chunks.filter(F.col("column") == column).select(
         "codec", "payload", "null_count"
     )
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for batch in batches:
-            for i in range(batch.num_rows):
-                codec = batch.column("codec")[i].as_py()
-                payload = batch.column("payload")[i].as_py()
-                has_null = batch.column("null_count")[i].as_py() > 0
-                if codec in ("dict", "rle"):
-                    secs = framing.unpack_sections(payload)
-                    meta = json.loads(secs[0])
-                    dict_arr = _decode_dict_values(
-                        secs[3], secs[4], meta["dict_n"], _dv_dtype(dtype)
-                    )
-                    values = _typed_dict(dict_arr, dtype).cast(out_t)
-                else:
-                    import pyarrow.compute as pc
+        for codec, payload, null_count in _rows(
+            batches, "codec", "payload", "null_count"
+        ):
+            if codec in ("dict", "rle"):
+                secs = framing.unpack_sections(payload)
+                dict_n = json.loads(secs[0])["dict_n"]
+                values = _section_dict(secs, dict_n, dtype).cast(out_t)
+            else:
+                import pyarrow.compute as pc
 
-                    arr = decode_array(payload, dtype, codec)
-                    values = pc.unique(arr.drop_null()).cast(out_t)
-                if has_null:
-                    values = pa.concat_arrays([values, pa.nulls(1, type=out_t)])
-                if len(values):
-                    yield pa.RecordBatch.from_arrays([values], ["value"])
+                arr = decode_array(payload, dtype, codec)
+                values = pc.unique(arr.drop_null()).cast(out_t)
+            if null_count > 0:
+                values = pa.concat_arrays([values, pa.nulls(1, type=out_t)])
+            if len(values):
+                yield pa.RecordBatch.from_arrays([values], ["value"])
 
     return work.mapInArrow(fn, schema=f"value {dtype}").distinct()
 
@@ -329,76 +278,19 @@ def _distinct_multi(
     chunks: DataFrame, cols: list[str], where: Pred | None, colocated: bool,
     schema_cols=None,
 ) -> DataFrame:
-    """Multi-column DISTINCT: chunk-local combination compaction via the
-    stacked-dictionary-codes machinery, Catalyst distinct to finish."""
+    """Multi-column DISTINCT — a GROUP BY of every column with no
+    aggregate: the grouped-aggregate kernel's per-chunk groups (chunk-
+    local combination compaction over stacked dictionary codes), then a
+    Catalyst distinct across chunks."""
     if not cols:
         raise ValueError("distinct_encoded needs at least one column")
     if len(set(cols)) != len(cols):
         raise ValueError(f"distinct_encoded: duplicate columns {cols}")
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(chunks, cols + refs, "distinct_encoded", schema_cols)
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, cols + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in cols + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " distinct_encoded needs every projected column and every"
-                " WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        _, m, key_arrs = _key_codes(group, cols, dtypes, mask, cache)
-        if m == 0:
-            return None
-        return pa.RecordBatch.from_arrays(list(key_arrs), cols)
-
-    schema = ", ".join(f"`{c}` {dtypes[c]}" for c in cols)
-    return work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit), schema=schema
-    ).distinct()
-
-
-def _distinct_filtered(
-    chunks: DataFrame, column: str, where: Pred, colocated: bool,
-    schema_cols=None,
-) -> DataFrame:
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(chunks, [column] + refs, "distinct_encoded", schema_cols)
-    dtype = dtypes[column]
-    out_t = typemap.spark_to_arrow(dtype)
-    pruned = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(pruned, [column] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in {column, *refs} if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " distinct_encoded needs the projected column and every"
-                " WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        codes, dict_arr, _ = _get_codes(group, column, dtypes, cache)
-        surv = np.unique(codes[mask])
-        full = pa.concat_arrays(
-            [dict_arr.cast(out_t), pa.nulls(1, type=out_t)]
-        )  # index len(dict) == the null sentinel
-        values = full.take(pa.array(surv, type=pa.int64()))
-        if not len(values):
-            return None
-        return pa.RecordBatch.from_arrays([values], ["value"])
-
-    return (
-        work.mapInArrow(
-            lambda batches: _pair_stream(batches, emit), schema=f"value {dtype}"
-        )
-        .distinct()
+    groups, _ = _agg_partials(
+        "distinct_encoded", chunks, cols, cols, [("count", "*", "n")],
+        colocated, where, schema_cols,
     )
+    return groups.select(*[F.col(f"`{c}`") for c in cols]).distinct()
 
 
 def group_count_distinct_encoded(
@@ -410,59 +302,20 @@ def group_count_distinct_encoded(
     schema_cols=None,
 ) -> DataFrame:
     """``SELECT keys, count(DISTINCT val) GROUP BY keys`` over encoded
-    data: per chunk, np.unique over the STACKED (key codes..., val code)
-    columns yields the chunk-local distinct pairs — both sides read as
-    dictionary codes, values materializing only at per-chunk-distinct
-    scale. The shuffle carries those pairs and Catalyst's count_distinct
+    data: per chunk, the grouped-aggregate kernel's groups over (keys...,
+    val) — np.unique over the STACKED codes — are the chunk-local
+    distinct pairs; both sides read as dictionary codes, values
+    materializing only at per-chunk-distinct scale. The shuffle carries
+    those pairs and Catalyst's count_distinct
     finishes (cross-chunk duplicates collapse there). SQL semantics:
     NULL values don't count (a key whose values are all NULL reports 0,
     and the key row is still present); NULL keys group together. Output:
     (key | the named key columns, nd:bigint)."""
-    keys, single = _norm_keys("group_count_distinct_encoded", key_col, val_col)
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, keys + [val_col] + refs, "group_count_distinct_encoded",
+    keys, out_names = _norm_keys("group_count_distinct_encoded", key_col, val_col)
+    pairs, _ = _agg_partials(
+        "group_count_distinct_encoded", chunks, keys + [val_col],
+        [*out_names, "__pe_v"], [("count", "*", "n")], colocated, where,
         schema_cols,
-    )
-    out_names = ["key"] if single else keys
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + [val_col] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + [val_col] + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " group_count_distinct_encoded needs every key, the value"
-                " column, and every WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        per, dicts = [], []
-        for c in keys + [val_col]:
-            codes, dict_arr, _ = _get_codes(group, c, dtypes, cache)
-            if mask is not None:
-                codes = codes[mask]
-            per.append(codes)
-            dicts.append(dict_arr)
-        stacked = np.stack(per, axis=1)
-        uniq = np.unique(stacked, axis=0)
-        if not len(uniq):
-            return None
-        outs = []
-        for k, c in enumerate(keys + [val_col]):
-            out_t = typemap.spark_to_arrow(dtypes[c])
-            full = pa.concat_arrays([dicts[k].cast(out_t), pa.nulls(1, type=out_t)])
-            outs.append(full.take(pa.array(uniq[:, k], type=pa.int64())))
-        return pa.RecordBatch.from_arrays(outs, [*out_names, "__pe_v"])
-
-    key_schema = ", ".join(
-        f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys)
-    )
-    pairs = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=f"{key_schema}, __pe_v {dtypes[val_col]}",
     )
     return pairs.groupBy(*[F.col(f"`{n}`") for n in out_names]).agg(
         F.count_distinct(F.col("__pe_v")).alias("nd")
@@ -504,13 +357,8 @@ def quantiles_encoded(
       unpersisted deterministically."""
     from pyspark.sql import Window
 
-    if not qs:
-        raise ValueError("quantiles_encoded needs at least one q")
-    bad = [q for q in qs if not (0.0 <= float(q) <= 1.0)]
-    if bad:
-        raise ValueError(f"quantiles_encoded: q out of [0,1]: {bad}")
+    uq = _norm_qs("quantiles_encoded", qs)
     spark = chunks.sparkSession
-    uq = [float(q) for q in dict.fromkeys(qs)]
     vc = value_counts_encoded(
         chunks, column, where=where, colocated=colocated,
         schema_cols=schema_cols,
@@ -547,6 +395,16 @@ def quantiles_encoded(
     return joined.groupBy("q").agg(F.min("value").alias("value"))
 
 
+def _norm_qs(op: str, qs: list[float]) -> list[float]:
+    """Validated quantile fractions, deduplicated in request order."""
+    if not qs:
+        raise ValueError(f"{op} needs at least one q")
+    bad = [q for q in qs if not (0.0 <= float(q) <= 1.0)]
+    if bad:
+        raise ValueError(f"{op}: q out of [0,1]: {bad}")
+    return [float(q) for q in dict.fromkeys(qs)]
+
+
 def group_quantiles_encoded(
     chunks: DataFrame,
     key_col: "str | list[str]",
@@ -558,11 +416,11 @@ def group_quantiles_encoded(
 ) -> DataFrame:
     """Exact discrete quantiles PER GROUP over encoded data:
     ``SELECT keys, quantile_disc(val, q) GROUP BY keys`` for each q.
-    Per chunk, np.unique over the stacked (key codes..., val code)
-    columns with counts yields (keys, value, cnt) partials — both sides
-    read as dictionary codes, so values materialize at per-chunk-distinct
-    scale, never per row. Catalyst collapses cross-chunk duplicates,
-    then one running-count window PARTITIONED BY the keys locates rank
+    The (keys, value, count) table is the grouped-aggregate kernel
+    counting rows per (keys..., val) (_grouped): both sides read as
+    dictionary codes, so values materialize at per-chunk-distinct scale,
+    never per row, and Catalyst collapses cross-chunk duplicates. Then
+    one running-count window PARTITIONED BY the keys locates rank
     ``max(1, ceil(q*n))`` among each group's n non-null values (the same
     discrete-quantile rule quantiles_encoded uses; NULL values are
     ignored, a group whose values are all NULL reports NULL, and NULL
@@ -580,61 +438,14 @@ def group_quantiles_encoded(
     with a pre-filter on the key."""
     from pyspark.sql import Window
 
-    keys, single = _norm_keys("group_quantiles_encoded", key_col, val_col)
-    if not qs:
-        raise ValueError("group_quantiles_encoded needs at least one q")
-    bad = [q for q in qs if not (0.0 <= float(q) <= 1.0)]
-    if bad:
-        raise ValueError(f"group_quantiles_encoded: q out of [0,1]: {bad}")
-    uq = [float(q) for q in dict.fromkeys(qs)]
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, keys + [val_col] + refs, "group_quantiles_encoded",
+    keys, out_names = _norm_keys("group_quantiles_encoded", key_col, val_col)
+    uq = _norm_qs("group_quantiles_encoded", qs)
+    vc = _grouped(
+        "group_quantiles_encoded", chunks, keys + [val_col],
+        [*out_names, "__pe_v"], [("count", "*", "__pe_c")], colocated, where,
         schema_cols,
     )
-    out_names = ["key"] if single else keys
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + [val_col] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + [val_col] + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " group_quantiles_encoded needs every key, the value"
-                " column, and every WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        per, dicts = [], []
-        for c in keys + [val_col]:
-            codes, dict_arr, _ = _get_codes(group, c, dtypes, cache)
-            if mask is not None:
-                codes = codes[mask]
-            per.append(codes)
-            dicts.append(dict_arr)
-        stacked = np.stack(per, axis=1)
-        uniq, cnts = np.unique(stacked, axis=0, return_counts=True)
-        if not len(uniq):
-            return None
-        outs = []
-        for k, c in enumerate(keys + [val_col]):
-            out_t = typemap.spark_to_arrow(dtypes[c])
-            full = pa.concat_arrays([dicts[k].cast(out_t), pa.nulls(1, type=out_t)])
-            outs.append(full.take(pa.array(uniq[:, k], type=pa.int64())))
-        outs.append(pa.array(cnts.astype(np.int64), type=pa.int64()))
-        return pa.RecordBatch.from_arrays(outs, [*out_names, "__pe_v", "__pe_c"])
-
-    key_schema = ", ".join(f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys))
-    pairs = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=f"{key_schema}, __pe_v {dtypes[val_col]}, __pe_c bigint",
-    )
     kcols = [F.col(f"`{n}`") for n in out_names]
-    vc = pairs.groupBy(*kcols, F.col("__pe_v")).agg(
-        F.sum("__pe_c").alias("__pe_c")
-    )
     spark = chunks.sparkSession
     q_df = spark.createDataFrame([(q,) for q in uq], "q double")
     # every (group, q) pair must appear in the output even when the
@@ -765,33 +576,81 @@ def _pair_work(
     return work.sortWithinPartitions("chunk_id", "column")
 
 
+def _rows(batches: Iterator[pa.RecordBatch], *cols: str) -> Iterator[tuple]:
+    """Chunk-table rows, one at a time, as tuples of ``cols``' values."""
+    for batch in batches:
+        arrs = [batch.column(c) for c in cols]
+        for i in range(batch.num_rows):
+            yield tuple(a[i].as_py() for a in arrs)
+
+
 def _pair_stream(batches: Iterator[pa.RecordBatch], emit) -> Iterator[pa.RecordBatch]:
     """Group contiguous (chunk_id) rows and hand {column: (codec, payload,
     n_values)} dicts to ``emit``."""
     pending: dict = {}
     cur = None
-    for batch in batches:
-        for i in range(batch.num_rows):
-            cid = batch.column("chunk_id")[i].as_py()
-            if cid != cur and pending:
-                out = emit(pending)
-                if out is not None:
-                    yield out
-                pending = {}
-            cur = cid
-            pending[batch.column("column")[i].as_py()] = (
-                batch.column("codec")[i].as_py(),
-                batch.column("payload")[i].as_py(),
-                batch.column("n_values")[i].as_py(),
-            )
+    for cid, column, *entry in _rows(
+        batches, "chunk_id", "column", "codec", "payload", "n_values"
+    ):
+        if cid != cur and pending:
+            out = emit(pending)
+            if out is not None:
+                yield out
+            pending = {}
+        cur = cid
+        pending[column] = tuple(entry)
     if pending:
         out = emit(pending)
         if out is not None:
             yield out
 
 
-def _norm_keys(op: str, key_cols, val_col: str) -> tuple[list[str], bool]:
-    """-> (key column list, single-key flag). Single-key keeps the legacy
+def _chunk_pass(
+    op: str,
+    chunks: DataFrame,
+    cols: list[str],
+    where: Pred | None,
+    colocated: bool,
+    schema_cols=None,
+):
+    """The per-chunk prelude every paired operator shares -> (dtypes, run).
+
+    ``dtypes`` maps ``cols`` and the WHERE columns to their dtypes (one
+    discovery, fail-fast on unknown names — _dtype_map). ``run(emit,
+    schema, prune=where)`` stats-prunes the chunks on ``prune``
+    (prune_chunks), pairs each chunk's column rows (_pair_work) and maps
+    ``emit(group, mask, cache)`` over the chunks: ``mask`` is the WHERE
+    keep-mask (None without ``where``) and ``cache`` the chunk's
+    _get_codes memo, so a column the WHERE already unpacked is not
+    unpacked again. A chunk lacking one of those columns raises, naming
+    ``op``."""
+    refs = sorted(referenced_columns(where)) if where is not None else []
+    need = list(dict.fromkeys(cols + refs))
+    dtypes, schema_cols = _dtype_map(chunks, need, op, schema_cols)
+
+    def run(emit, schema, prune: Pred | None = where) -> DataFrame:
+        pruned = chunks if prune is None else prune_chunks(chunks, prune, schema_cols)
+
+        def per_chunk(group: dict) -> pa.RecordBatch | None:
+            missing = [c for c in need if c not in group]
+            if missing:
+                raise ValueError(
+                    f"chunk is missing column rows for {missing} — {op}"
+                    " needs every column it reads and every WHERE column in"
+                    " the chunk table"
+                )
+            cache: dict = {}
+            return emit(group, _build_mask(group, where, dtypes, cache), cache)
+
+        return _pair_work(pruned, need, colocated).mapInArrow(
+            lambda batches: _pair_stream(batches, per_chunk), schema=schema
+        )
+
+    return dtypes, run
+
+
+def _norm_keys(op: str, key_cols, val_col: str) -> tuple[list[str], list[str]]:
+    """-> (key column list, output key names). Single-key keeps the legacy
     output column name ``key``; multi-key outputs the real column names."""
     single = isinstance(key_cols, str)
     keys = [key_cols] if single else list(key_cols)
@@ -801,15 +660,15 @@ def _norm_keys(op: str, key_cols, val_col: str) -> tuple[list[str], bool]:
         raise ValueError(f"{op}: duplicate key columns {keys}")
     if val_col in keys:
         raise ValueError(f"{op}: value column {val_col!r} cannot also be a key")
-    return keys, single
+    return keys, (["key"] if single else keys)
 
 
 def _key_codes(
     group: dict,
     key_cols: list[str],
     key_dtypes: dict[str, str],
-    mask: np.ndarray | None = None,
-    cache: dict | None = None,
+    mask: np.ndarray | None,
+    cache: dict,
 ) -> tuple[np.ndarray, int, list[pa.Array]]:
     """-> (compact group codes per row, group count m, one key Array of
     length m per key column). Each key column's dictionary codes come from
@@ -823,7 +682,7 @@ def _key_codes(
     null element exactly as SQL GROUP BY groups nulls."""
     per, dicts = [], []
     for c in key_cols:
-        codes, dict_arr, _ = _get_codes(group, c, key_dtypes, cache if cache is not None else {})
+        codes, dict_arr, _ = _get_codes(group, c, key_dtypes, cache)
         if mask is not None:
             codes = codes[mask]
         per.append(codes)
@@ -897,23 +756,23 @@ def _group_sums(codes, vals, vmask, m: int, lane: str) -> np.ndarray:
     return sums
 
 
-def _sum_arrow(sums, keep, lane: str, sum_sql: str) -> pa.Array:
+def _sum_arrow(sums, lane: str, sum_sql: str) -> pa.Array:
     if lane == "decimal":
         import decimal as _dec
 
         _, s = typemap.decimal_params(sum_sql)
         return pa.array(
-            [_dec.Decimal(int(v)).scaleb(-s) for v in sums[keep]],
+            [_dec.Decimal(int(v)).scaleb(-s) for v in sums],
             type=pa.decimal128(38, s),
         )
     t = pa.float64() if lane == "float" else pa.int64()
-    return pa.array(sums[keep], type=t)
+    return pa.array(sums, type=t)
 
 
 def _minmax_arrays(
     codes, vals, vmask, m: int, lane: str, val_dtype: str
-) -> tuple[pa.Array, pa.Array, np.ndarray]:
-    """-> (mins, maxs, has) typed in the value column's own type. Float
+) -> tuple[pa.Array, pa.Array]:
+    """-> (mins, maxs) typed in the value column's own type. Float
     NaN follows Spark's ordering (NaN greater than everything): MAX is
     NaN when any value in the group is NaN; MIN is NaN only when every
     non-null value is."""
@@ -937,7 +796,7 @@ def _minmax_arrays(
         all_nan = has & ~non_nan_seen
         mins[all_nan] = np.nan
         mk = lambda a: pa.array(a, type=pa.float64(), mask=~has).cast(val_t)
-        return mk(mins), mk(maxs), has
+        return mk(mins), mk(maxs)
     I64 = np.iinfo(np.int64)
     mins = np.full(m, I64.max, dtype=np.int64)
     maxs = np.full(m, I64.min, dtype=np.int64)
@@ -948,45 +807,49 @@ def _minmax_arrays(
         return (
             typemap.unscaled_to_decimal(ints(mins), val_dtype),
             typemap.unscaled_to_decimal(ints(maxs), val_dtype),
-            has,
         )
-    return ints(mins).cast(val_t), ints(maxs).cast(val_t), has
+    return ints(mins).cast(val_t), ints(maxs).cast(val_t)
 
 
-def _rank_minmax(
-    vcodes: np.ndarray, vdict: pa.Array, codes: np.ndarray, m: int, out_t
-) -> tuple[pa.Array, pa.Array, np.ndarray]:
-    """Per-group (min, max, non-null count) for ANY orderable dtype, both
-    sides at dictionary scale: the value dictionary is ranked once
-    (``pc.sort_indices`` — the same total order Spark/SQL uses: binary
-    collation for strings, NaN greatest for floats) and min/max reduce
-    over RANKS through the codes; extreme VALUES come back by indexing
-    the sorted dictionary. ``vcodes`` must already be row-mask-filtered
-    to align with ``codes``."""
+def _dict_ranks(vdict: pa.Array, out_t) -> tuple[np.ndarray, pa.Array]:
+    """Rank a value dictionary once -> (rank per code, sorted dictionary
+    cast to ``out_t``). ``pc.sort_indices`` gives the same total order
+    Spark/SQL uses: binary collation for strings, NaN greatest for
+    floats. The null sentinel code len(vdict) ranks -1."""
     import pyarrow.compute as pc
 
     nv = len(vdict)
     si = pc.sort_indices(vdict).to_numpy(zero_copy_only=False).astype(np.int64)
     rank = np.empty(nv + 1, dtype=np.int64)
     rank[si] = np.arange(nv)
-    rank[nv] = -1  # null sentinel — excluded below
-    rr = rank[vcodes]
-    nn = vcodes < nv
-    nn_codes, nn_rr = codes[nn], rr[nn]
+    rank[nv] = -1
+    return rank, vdict.take(pa.array(si, type=pa.int64())).cast(out_t)
+
+
+def _rank_minmax(
+    vcodes: np.ndarray, vdict: pa.Array, codes: np.ndarray, m: int, out_t
+) -> tuple[pa.Array, pa.Array]:
+    """Per-group (min, max) for ANY orderable dtype, both sides at
+    dictionary scale: the value dictionary is ranked once (_dict_ranks)
+    and min/max reduce over RANKS through the codes; extreme VALUES come
+    back by indexing the sorted dictionary. ``vcodes`` must already be
+    row-mask-filtered to align with ``codes``."""
+    nv = len(vdict)
+    rank, sorted_dict = _dict_ranks(vdict, out_t)
+    nn = vcodes < nv  # the null sentinel is excluded
+    nn_codes, nn_rr = codes[nn], rank[vcodes][nn]
     minr = np.full(m, nv, dtype=np.int64)
     maxr = np.full(m, -1, dtype=np.int64)
     np.minimum.at(minr, nn_codes, nn_rr)
     np.maximum.at(maxr, nn_codes, nn_rr)
     has = maxr >= 0
-    sorted_dict = vdict.take(pa.array(si, type=pa.int64())).cast(out_t)
     mn = sorted_dict.take(
         pa.array(np.where(has, minr, 0), type=pa.int64(), mask=~has)
     )
     mx = sorted_dict.take(
         pa.array(np.where(has, maxr, 0), type=pa.int64(), mask=~has)
     )
-    n_vals = np.bincount(nn_codes, minlength=m).astype(np.int64)
-    return mn, mx, n_vals
+    return mn, mx
 
 
 def group_stats_encoded(
@@ -999,7 +862,8 @@ def group_stats_encoded(
 ) -> DataFrame:
     """Grouped count/sum/min/max in one encoded-side pass:
     ``SELECT keys, count(*), count(val), sum(val), min(val), max(val)
-    GROUP BY keys`` with every key read as dictionary codes (module
+    GROUP BY keys`` — a fixed agg spec over group_agg_encoded's kernel
+    (_agg_partials), with every key read as dictionary codes (module
     docstring); multiple key columns compose via np.unique over the
     stacked per-key codes (_key_codes) — composite keys still never
     materialize per row. Value column may be int (exact int64),
@@ -1013,72 +877,17 @@ def group_stats_encoded(
     (engine/encoded_filter — |dictionary| comparisons per leaf, one
     vectorized gather per row; Kleene 3-valued, so NULL semantics match
     the SQL WHERE exactly)."""
-    keys, single = _norm_keys("group_stats_encoded", key_col, val_col)
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, keys + [val_col] + refs, "group_stats_encoded", schema_cols
-    )
-    val_dtype = dtypes[val_col]
-    lane, sum_sql = _val_lane("group_stats_encoded", val_dtype)
-    out_names = ["key"] if single else keys
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + [val_col] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + [val_col] + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " group_stats_encoded needs every key, the value column,"
-                " and every WHERE column in the chunk table"
-            )
-        v_codec, v_payload, _ = group[val_col]
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        codes, m, key_arrs = _key_codes(group, keys, dtypes, mask, cache)
-        if m == 0:
-            return None
-        varr = decode_array(v_payload, val_dtype, v_codec)
-        vals, vmask = _extract_vals(varr, val_dtype, lane)
-        if mask is not None:
-            vals, vmask = vals[mask], vmask[mask]
-        sums = _group_sums(codes, vals, vmask, m, lane)
-        nn = np.bincount(codes[~vmask], minlength=m).astype(np.int64)
-        n_rows = np.bincount(codes, minlength=m).astype(np.int64)
-        mins, maxs, _ = _minmax_arrays(codes, vals, vmask, m, lane, val_dtype)
-        keep = np.ones(m, dtype=bool)  # _key_codes groups are dense
-        return pa.RecordBatch.from_arrays(
-            [
-                *key_arrs,
-                pa.array(n_rows, type=pa.int64()),
-                pa.array(nn, type=pa.int64()),
-                _sum_arrow(sums, keep, lane, sum_sql),
-                mins,
-                maxs,
-            ],
-            [*out_names, "__pe_nr", "__pe_nn", "__pe_s", "__pe_mn", "__pe_mx"],
-        )
-
-    key_schema = ", ".join(
-        f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys)
-    )
-    partials = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=(
-            f"{key_schema}, __pe_nr bigint, __pe_nn bigint, __pe_s {sum_sql},"
-            f" __pe_mn {val_dtype}, __pe_mx {val_dtype}"
-        ),
-    )
-    return partials.groupBy(*[F.col(f"`{n}`") for n in out_names]).agg(
-        F.sum("__pe_nr").alias("n_rows"),
-        F.sum("__pe_nn").alias("n_vals"),
-        F.when(F.sum("__pe_nn") > 0, F.sum("__pe_s"))
-        .otherwise(F.lit(None))
-        .cast(sum_sql)
-        .alias("s"),
-        F.min("__pe_mn").alias("mn"),
-        F.max("__pe_mx").alias("mx"),
+    keys, out_names = _norm_keys("group_stats_encoded", key_col, val_col)
+    return _grouped(
+        "group_stats_encoded", chunks, keys, out_names,
+        [
+            ("count", "*", "n_rows"),
+            ("count", val_col, "n_vals"),
+            ("sum", val_col, "s"),
+            ("min", val_col, "mn"),
+            ("max", val_col, "mx"),
+        ],
+        colocated, where, schema_cols,
     )
 
 
@@ -1095,69 +904,25 @@ def group_minmax_encoded(
     rejects (string, timestamp, date, boolean), which group_sum/
     group_stats_encoded correctly refuse.
 
-    Both sides stay at dictionary scale: the VALUE column also reads as
-    (codes, dictionary), its dictionary is ranked once per chunk
-    (``pc.sort_indices`` — the same total order Spark/SQL uses: binary
-    collation for strings, NaN greatest for floats), and per-group
-    min/max reduce over RANKS through the codes. The extreme VALUES come
-    back by indexing the sorted dictionary — per-row value
-    materialization never happens, for any dtype. Output: (key | the
-    named key columns, n_rows, n_vals, mn, mx); mn/mx NULL for all-null
-    groups (SQL). ``where``/``colocated`` as in group_stats_encoded."""
-    keys, single = _norm_keys("group_minmax_encoded", key_col, val_col)
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, keys + [val_col] + refs, "group_minmax_encoded", schema_cols
-    )
-    val_dtype = dtypes[val_col]
-    out_t = typemap.spark_to_arrow(val_dtype)
-    out_names = ["key"] if single else keys
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + [val_col] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + [val_col] + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " group_minmax_encoded needs every key, the value column,"
-                " and every WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        vcodes, vdict, _ = _get_codes(group, val_col, dtypes, cache)
-        if mask is not None:
-            vcodes = vcodes[mask]
-        codes, m, key_arrs = _key_codes(group, keys, dtypes, mask, cache)
-        if m == 0:
-            return None
-        mn, mx, n_vals = _rank_minmax(vcodes, vdict, codes, m, out_t)
-        n_rows = np.bincount(codes, minlength=m).astype(np.int64)
-        return pa.RecordBatch.from_arrays(
-            [
-                *key_arrs,
-                pa.array(n_rows, type=pa.int64()),
-                pa.array(n_vals, type=pa.int64()),
-                mn,
-                mx,
-            ],
-            [*out_names, "__pe_nr", "__pe_nn", "__pe_mn", "__pe_mx"],
-        )
-
-    key_schema = ", ".join(f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys))
-    partials = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=(
-            f"{key_schema}, __pe_nr bigint, __pe_nn bigint,"
-            f" __pe_mn {val_dtype}, __pe_mx {val_dtype}"
-        ),
-    )
-    return partials.groupBy(*[F.col(f"`{n}`") for n in out_names]).agg(
-        F.sum("__pe_nr").alias("n_rows"),
-        F.sum("__pe_nn").alias("n_vals"),
-        F.min("__pe_mn").alias("mn"),
-        F.max("__pe_mx").alias("mx"),
+    A fixed agg spec over group_agg_encoded's kernel (_agg_partials),
+    which picks the value column's lane: numeric values decode once and
+    reduce in their own lane (_minmax_arrays — NaN greatest, as in
+    Spark); any other dtype stays at dictionary scale — its dictionary is
+    ranked once per chunk and per-group min/max reduce over RANKS through
+    the codes (_rank_minmax), so per-row values never materialize.
+    Output: (key | the named key columns, n_rows, n_vals, mn, mx); mn/mx
+    NULL for all-null groups (SQL). ``where``/``colocated`` as in
+    group_stats_encoded."""
+    keys, out_names = _norm_keys("group_minmax_encoded", key_col, val_col)
+    return _grouped(
+        "group_minmax_encoded", chunks, keys, out_names,
+        [
+            ("count", "*", "n_rows"),
+            ("count", val_col, "n_vals"),
+            ("min", val_col, "mn"),
+            ("max", val_col, "mx"),
+        ],
+        colocated, where, schema_cols,
     )
 
 
@@ -1186,44 +951,25 @@ def group_topk_encoded(
     (SQL ORDER BY LIMIT semantics for ranked values; use
     group_stats_encoded's n_rows - n_vals for null accounting).
     Output: (key | the named key columns, value)."""
-    import pyarrow.compute as pc
-
     if k < 1:
         raise ValueError(f"group_topk_encoded: k must be >= 1, got {k}")
-    keys, single = _norm_keys("group_topk_encoded", key_col, val_col)
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, keys + [val_col] + refs, "group_topk_encoded", schema_cols
+    keys, out_names = _norm_keys("group_topk_encoded", key_col, val_col)
+    dtypes, run = _chunk_pass(
+        "group_topk_encoded", chunks, keys + [val_col], where, colocated,
+        schema_cols,
     )
     val_dtype = dtypes[val_col]
     out_t = typemap.spark_to_arrow(val_dtype)
-    out_names = ["key"] if single else keys
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + [val_col] + refs, colocated)
 
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + [val_col] + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} —"
-                " group_topk_encoded needs every key, the value column,"
-                " and every WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
+    def emit(group: dict, mask, cache: dict) -> pa.RecordBatch | None:
         vcodes, vdict, _ = _get_codes(group, val_col, dtypes, cache)
         if mask is not None:
             vcodes = vcodes[mask]
         codes, m, key_arrs = _key_codes(group, keys, dtypes, mask, cache)
         if m == 0:
             return None
-        nv = len(vdict)
-        si = pc.sort_indices(vdict).to_numpy(zero_copy_only=False).astype(np.int64)
-        rank = np.empty(nv + 1, dtype=np.int64)
-        rank[si] = np.arange(nv)
-        rank[nv] = -1
-        nn = vcodes < nv  # nulls never rank
+        rank, sorted_dict = _dict_ranks(vdict, out_t)
+        nn = vcodes < len(vdict)  # nulls never rank
         g, r = codes[nn], rank[vcodes[nn]]
         if not len(g):
             return None
@@ -1233,7 +979,6 @@ def group_topk_encoded(
         lens = np.diff(np.r_[starts, len(gs)])
         pos = np.arange(len(gs)) - np.repeat(starts, lens)
         top = pos < k  # chunk-local per-group top-k candidates
-        sorted_dict = vdict.take(pa.array(si, type=pa.int64())).cast(out_t)
         vals = sorted_dict.take(pa.array(r[order][top], type=pa.int64()))
         gtake = pa.array(gs[top], type=pa.int64())
         return pa.RecordBatch.from_arrays(
@@ -1242,10 +987,7 @@ def group_topk_encoded(
         )
 
     key_schema = ", ".join(f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys))
-    cand = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=f"{key_schema}, value {val_dtype}",
-    )
+    cand = run(emit, f"{key_schema}, value {val_dtype}")
     from pyspark.sql import Window
 
     order_col = F.col("value").desc() if desc else F.col("value").asc()
@@ -1265,8 +1007,9 @@ def group_sum_encoded(
     where: Pred | None = None,
     schema_cols=None,
 ) -> DataFrame:
-    """``SELECT keys, sum(val) GROUP BY keys`` with the key side read from
-    codec structures: per chunk, the keys' dictionary codes drive one
+    """``SELECT keys, sum(val) GROUP BY keys`` — a one-aggregate spec over
+    group_agg_encoded's kernel (_agg_partials) — with the key side read
+    from codec structures: per chunk, the keys' dictionary codes drive one
     scatter-add over the value column — key values materialize only at
     dictionary scale, and multi-key composites compact via np.unique over
     stacked codes (_key_codes), never per row. Value lanes as
@@ -1277,60 +1020,10 @@ def group_sum_encoded(
     (see _pair_work). ``where`` pushes a WHERE clause into the encoded
     pass: stats-pruned chunks plus a dictionary-domain exact recheck
     (see group_stats_encoded / engine/encoded_filter)."""
-    keys, single = _norm_keys("group_sum_encoded", key_col, val_col)
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(
-        chunks, keys + [val_col] + refs, "group_sum_encoded", schema_cols
-    )
-    val_dtype = dtypes[val_col]
-    lane, sum_sql = _val_lane("group_sum_encoded", val_dtype)
-    out_names = ["key"] if single else keys
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + [val_col] + refs, colocated)
-
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + [val_col] + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} — group_sum_encoded"
-                " needs every key, the value column, and every WHERE column"
-                " in the chunk table"
-            )
-        v_codec, v_payload, _ = group[val_col]
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
-        codes, m, key_arrs = _key_codes(group, keys, dtypes, mask, cache)
-        if m == 0:
-            return None
-        varr = decode_array(v_payload, val_dtype, v_codec)
-        vals, vmask = _extract_vals(varr, val_dtype, lane)
-        if mask is not None:
-            vals, vmask = vals[mask], vmask[mask]
-        sums = _group_sums(codes, vals, vmask, m, lane)
-        nn = np.bincount(codes[~vmask], minlength=m).astype(np.int64)
-        keep = np.ones(m, dtype=bool)  # _key_codes groups are dense
-        return pa.RecordBatch.from_arrays(
-            [
-                *key_arrs,
-                _sum_arrow(sums, keep, lane, sum_sql),
-                pa.array(nn, type=pa.int64()),
-            ],
-            [*out_names, "__pe_s", "__pe_nn"],
-        )
-
-    key_schema = ", ".join(
-        f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys)
-    )
-    partials = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=f"{key_schema}, __pe_s {sum_sql}, __pe_nn bigint",
-    )
-    return partials.groupBy(*[F.col(f"`{n}`") for n in out_names]).agg(
-        F.when(F.sum("__pe_nn") > 0, F.sum("__pe_s"))
-        .otherwise(F.lit(None))
-        .cast(sum_sql)
-        .alias("s")
+    keys, out_names = _norm_keys("group_sum_encoded", key_col, val_col)
+    return _grouped(
+        "group_sum_encoded", chunks, keys, out_names,
+        [("sum", val_col, "s")], colocated, where, schema_cols,
     )
 
 
@@ -1383,11 +1076,12 @@ def group_agg_encoded(
     """Multi-aggregate GROUP BY over encoded data in ONE chunk pass:
     ``SELECT keys, agg1, agg2, ... GROUP BY keys`` where each agg is a
     ``(fn, column, alias)`` tuple with fn in count/sum/avg/min/max
-    (``("count", "*", n)`` counts rows). Where group_sum/group_minmax/
-    group_stats_encoded each pay their own scan of the chunk table, this
-    reads every referenced column once and emits one combined partial
-    row per (chunk, group) — at 100 TB, an N-aggregate report costs one
-    pass instead of N.
+    (``("count", "*", n)`` counts rows). It reads every referenced
+    column once and emits one combined partial row per (chunk, group) —
+    at 100 TB, an N-aggregate report costs one pass instead of N.
+    group_sum/group_stats/group_minmax_encoded and the filtered
+    value_counts_encoded are fixed agg specs over the same kernel
+    (_agg_partials).
 
     Per column the cheapest sound lane is chosen: numeric columns
     (int/float/decimal) decode once and serve sum/avg/min/max/count from
@@ -1449,8 +1143,9 @@ def _agg_partials(
     where: Pred | None,
     schema_cols=None,
 ) -> tuple[DataFrame, list]:
-    """Shared single-pass partial builder behind group_agg_encoded and
-    group_agg_sets_encoded: one chunk pass over every referenced column
+    """The one grouped-aggregate kernel, behind group_agg_encoded,
+    group_agg_sets_encoded and the fixed-spec shims (_grouped): one
+    chunk pass over every referenced column
     -> (partials DataFrame keyed by ``out_names``, merge expressions in
     spec order). Partials are decomposable (count/sum re-sum, min/max
     re-extreme, avg = Σsum/Σcount), so ANY regrouping of them — a
@@ -1460,8 +1155,9 @@ def _agg_partials(
     if len(set(keys)) != len(keys):
         raise ValueError(f"{op}: duplicate key columns {keys}")
     agg_cols = sorted({c for _, c, _ in specs if c != "*"})
-    refs = _where_refs(where)
-    dtypes, schema_cols = _dtype_map(chunks, keys + agg_cols + refs, op, schema_cols)
+    dtypes, run = _chunk_pass(
+        op, chunks, keys + agg_cols, where, colocated, schema_cols
+    )
 
     # per referenced column: "decode" lane (numeric — one decode serves
     # every agg) or "codes" lane (dictionary-domain count/min/max only)
@@ -1477,9 +1173,6 @@ def _agg_partials(
             if fns & {"sum", "avg"}:
                 raise
             modes[c] = "codes"
-    if where is not None:
-        chunks = prune_chunks(chunks, where, schema_cols)
-    work = _pair_work(chunks, keys + agg_cols + refs, colocated)
 
     part_fields, merges = [], []
     for i, (fn, c, alias) in enumerate(specs):
@@ -1507,16 +1200,7 @@ def _agg_partials(
             part_fields.append(f"{a} {dtypes[c]}")
             merges.append((F.min(a) if fn == "min" else F.max(a)).alias(alias))
 
-    def emit(group: dict) -> pa.RecordBatch | None:
-        missing = [c for c in keys + agg_cols + refs if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} — {op}"
-                " needs every key, every aggregated column, and every"
-                " WHERE column in the chunk table"
-            )
-        cache: dict = {}
-        mask = _build_mask(group, where, dtypes, cache)
+    def emit(group: dict, mask, cache: dict) -> pa.RecordBatch | None:
         codes, m, key_arrs = _key_codes(group, keys, dtypes, mask, cache)
         if m == 0:
             return None
@@ -1543,16 +1227,15 @@ def _agg_partials(
                     vals, vmask = dec[c]
                     mm_cache[c] = _minmax_arrays(
                         codes, vals, vmask, m, lanes[c], dtypes[c]
-                    )[:2]
+                    )
                 else:
                     vcodes, vdict = cod[c]
                     mm_cache[c] = _rank_minmax(
                         vcodes, vdict, codes, m,
                         typemap.spark_to_arrow(dtypes[c]),
-                    )[:2]
+                    )
             return mm_cache[c]
 
-        keep = np.ones(m, dtype=bool)  # _key_codes groups are dense
         arrays, names = [*key_arrs], list(out_names)
         for i, (fn, c, alias) in enumerate(specs):
             a = f"__a{i}"
@@ -1570,7 +1253,7 @@ def _agg_partials(
                 vals, vmask = dec[c]
                 sums = _group_sums(codes, vals, vmask, m, lanes[c])
                 nn = np.bincount(codes[~vmask], minlength=m).astype(np.int64)
-                arrays.append(_sum_arrow(sums, keep, lanes[c], sum_sqls[c]))
+                arrays.append(_sum_arrow(sums, lanes[c], sum_sqls[c]))
                 arrays.append(pa.array(nn, type=pa.int64()))
                 names.extend([a, f"__c{i}"])
             else:
@@ -1580,11 +1263,24 @@ def _agg_partials(
         return pa.RecordBatch.from_arrays(arrays, names)
 
     key_schema = ", ".join(f"`{n}` {dtypes[c]}" for n, c in zip(out_names, keys))
-    partials = work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit),
-        schema=f"{key_schema}, {', '.join(part_fields)}",
+    return run(emit, f"{key_schema}, {', '.join(part_fields)}"), merges
+
+
+def _grouped(
+    op: str,
+    chunks: DataFrame,
+    keys: list[str],
+    out_names: list[str],
+    specs: list[tuple[str, str, str]],
+    colocated: bool,
+    where: Pred | None,
+    schema_cols=None,
+) -> DataFrame:
+    """A fixed agg spec through _agg_partials, merged per output key."""
+    partials, merges = _agg_partials(
+        op, chunks, keys, out_names, specs, colocated, where, schema_cols
     )
-    return partials, merges
+    return partials.groupBy(*[F.col(f"`{n}`") for n in out_names]).agg(*merges)
 
 
 def group_agg_sets_encoded(

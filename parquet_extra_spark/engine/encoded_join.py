@@ -42,8 +42,8 @@ from pyspark.sql import types as T
 
 from ..codecs import decode_array, typemap
 from .decoder import _spark_schema, discover_schema
-from .encoded_agg import _build_mask, _dtype_map, _get_codes, _pair_stream, _pair_work
-from .predicate import P, Pred, prune_chunks, referenced_columns
+from .encoded_agg import _chunk_pass, _get_codes
+from .predicate import P, Pred
 
 _HOW = ("inner", "left", "semi", "anti")
 
@@ -121,9 +121,10 @@ def join_encoded(
             f"join_encoded: output name collision {collide} — select/alias"
             " the dim side before joining"
         )
-    refs = sorted(referenced_columns(where)) if where is not None else []
-    needed = sorted({fact_key, *columns, *refs})
-    dtypes, _ = _dtype_map(chunks, needed, "join_encoded", schema_cols)
+    dtypes, run = _chunk_pass(
+        "join_encoded", chunks, [fact_key, *columns], where, colocated,
+        schema_cols,
+    )
     key_dtype = dtypes[fact_key]
     key_t = typemap.spark_to_arrow(key_dtype)
 
@@ -181,7 +182,6 @@ def join_encoded(
         # broadcast form inside prune_chunks, never per-value expressions
         key_pred = P.isin(fact_key, key_list)
         pred = key_pred if pred is None else (pred & key_pred)
-    pruned = chunks if pred is None else prune_chunks(chunks, pred, schema_cols)
 
     # key -> dim row index, built ONCE on the driver and shipped as a
     # broadcast: each executor deserializes it once and every chunk pays
@@ -192,19 +192,9 @@ def join_encoded(
     bc = spark.sparkContext.broadcast((lookup, dim_arrays))
     anti, left = how == "anti", how == "left"
     out_ts = {c: typemap.spark_to_arrow(dtypes[c]) for c in columns}
-    where_pred = where
 
-    def emit(group: dict) -> pa.RecordBatch | None:
-        need_here = {fact_key, *columns, *refs}
-        missing = [c for c in sorted(need_here) if c not in group]
-        if missing:
-            raise ValueError(
-                f"chunk is missing column rows for {missing} — join_encoded"
-                " needs the key, every output column, and every WHERE column"
-                " in the chunk table"
-            )
+    def emit(group: dict, mask, cache: dict) -> pa.RecordBatch | None:
         b_lookup, b_arrays = bc.value
-        cache: dict = {}
         codes, dict_arr, _ = _get_codes(group, fact_key, dtypes, cache)
         # match ONCE per dictionary entry (O(|dict|) dict lookups against
         # the broadcast map); sentinel len(dict) = null key, never matches
@@ -222,8 +212,8 @@ def join_encoded(
             keep = didx < 0
         else:
             keep = didx >= 0
-        if where_pred is not None:
-            keep &= _build_mask(group, where_pred, dtypes, cache)
+        if mask is not None:
+            keep &= mask
         idx = np.nonzero(keep)[0]
         if not len(idx):
             return None
@@ -257,7 +247,4 @@ def join_encoded(
             arrays, [f.name for f in out_struct.fields]
         )
 
-    work = _pair_work(pruned, sorted({fact_key, *columns, *refs}), colocated)
-    return work.mapInArrow(
-        lambda batches: _pair_stream(batches, emit), schema=out_struct
-    )
+    return run(emit, out_struct, prune=pred)

@@ -235,10 +235,13 @@ def _make_encode_fn(
         # permutation applied by a single Arrow take at flush, so the wide
         # content bytes move through memory exactly once per chunk
         # (gathering per batch AND sorting per chunk was two full passes).
-        # Memory stays bounded: a unit flushes the moment it reaches
-        # chunk_rows, and the number of open units per task is
-        # ~n_units/num_partitions (small by construction); a referenced
-        # input batch is pinned only until the units it feeds flush.
+        # Memory: a unit flushes the moment it reaches chunk_rows, and a
+        # referenced input batch is pinned only until the units it feeds
+        # flush. On the default lane the unit repartition gives a task
+        # ~n_units/num_partitions open units. On the exchange-free lane
+        # (assume_clustered, salt 0) any task may see rows of every
+        # bucket: the worst case is n_buckets open buffers per task, each
+        # filling toward chunk_rows rows — nothing here caps that sum.
         bufs: dict[tuple[int, int], list[tuple[pa.Table, "np.ndarray | None"]]] = {}
         buf_rows: dict[tuple[int, int], int] = {}
         seqs: dict[tuple[int, int], int] = {}
@@ -566,6 +569,9 @@ def encode(
         the default lane; on UNclustered input this lane still round-trips
         exactly but emits more, less-prunable chunks (every open unit per
         task buffers toward chunk_rows, so interleaved keys fragment).
+        MEMORY per task is not capped on this lane: in the worst case a
+        task holds n_buckets open buffers, each filling toward chunk_rows
+        rows.
         Unit-granular resume (encode_to) composes safely: run commits are
         atomic, and unit identity (part_key, salt) is layout-independent.
     """

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 import parquet_extra_spark as pes
 from parquet_extra_spark.engine.encoded_agg import (
+    group_minmax_encoded,
     group_stats_encoded,
     group_sum_encoded,
     value_counts_encoded,
@@ -224,7 +225,7 @@ def test_colocated_matches_and_skips_exchange(docs, doc_chunks):
     """colocated=True returns identical results on encode-output chunk
     tables AND plans no Exchange below the encoded-side kernel — the only
     shuffle carries (value, partial) rows."""
-    for fn in (group_sum_encoded, group_stats_encoded):
+    for fn in (group_sum_encoded, group_stats_encoded, group_minmax_encoded):
         a = sorted(map(tuple, fn(doc_chunks, "lang", "n_chars").collect()))
         b = sorted(
             map(tuple, fn(doc_chunks, "lang", "n_chars", colocated=True).collect())
@@ -328,9 +329,12 @@ def test_group_multikey_validation(doc_chunks):
 
 
 def test_group_minmax_orderable_dtypes(spark):
-    """min/max for the dtypes SUM rejects (string/timestamp/boolean) plus
-    float NaN ordering — the value column reduces over dictionary RANKS,
-    never rows; golden equality against Spark's own groupBy."""
+    """min/max for the dtypes SUM rejects (string/timestamp/boolean) —
+    the value column reduces over dictionary RANKS, never rows — and for
+    numeric columns (int, decimal, float with NaN ordering), which reduce
+    in their decoded lane; golden equality against Spark's own groupBy."""
+    import math
+
     from parquet_extra_spark.engine.encoded_agg import group_minmax_encoded
 
     df = spark.range(2000).select(
@@ -347,13 +351,20 @@ def test_group_minmax_orderable_dtypes(spark):
                 F.col("id").cast("double") / 7.0
             ),
         ).alias("f"),
+        F.when(
+            F.col("id") % 6 != 0, (F.col("id") * 31 % 1000 - 500).cast("int")
+        ).alias("i"),
+        F.when(
+            F.col("id") % 8 != 0,
+            ((F.col("id") * 13 % 10000) / 100 - 40).cast("decimal(12,2)"),
+        ).alias("d"),
     ).cache()
     chunks = pes.encode(df, sort_cols=["g"], chunk_rows=256, n_buckets=2, n_salts=1).cache()
 
     def key(r):
         return tuple(str(v) for v in r)
 
-    for col in ["s", "ts", "b", "f"]:
+    for col in ["s", "ts", "b", "f", "i", "d"]:
         got = sorted(
             key(r) for r in group_minmax_encoded(chunks, "g", col).collect()
         )
@@ -371,6 +382,39 @@ def test_group_minmax_orderable_dtypes(spark):
         assert got == want, col
     df.unpersist()
     chunks.unpersist()
+
+    # a float group holding both -0.0 and 0.0: either sign is a correct
+    # MIN/MAX (plain Spark's own result depends on input order), so the
+    # extremes compare by value, NaN by isnan
+    zf = spark.createDataFrame(
+        [
+            (0, -0.0), (0, 0.0), (0, 1.5),
+            (1, 0.0), (1, -0.0),
+            (2, float("nan")), (2, -0.0), (2, None),
+            (3, None), (4, -2.5), (4, 0.0), (4, -0.0),
+        ],
+        "g int, f double",
+    )
+    zchunks = pes.encode(zf, chunk_rows=4, n_buckets=1, n_salts=1)
+    got = {
+        r["key"]: tuple(r[1:])
+        for r in group_minmax_encoded(zchunks, "g", "f").collect()
+    }
+    want = {
+        r["g"]: tuple(r[1:])
+        for r in zf.groupBy("g")
+        .agg(F.count("*"), F.count("f"), F.min("f"), F.max("f"))
+        .collect()
+    }
+    assert got.keys() == want.keys()
+
+    def same(a, b):
+        if a is None or b is None:
+            return a is None and b is None
+        return (math.isnan(a) and math.isnan(b)) or a == b
+
+    for g, w in want.items():
+        assert all(same(a, b) for a, b in zip(got[g], w)), (g, got[g], w)
 
 
 def test_group_minmax_where_and_multikey(docs, doc_chunks):
