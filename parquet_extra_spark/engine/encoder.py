@@ -574,6 +574,8 @@ def encode(
         rows.
         Unit-granular resume (encode_to) composes safely: run commits are
         atomic, and unit identity (part_key, salt) is layout-independent.
+        A resume must keep this flag: the lane uses one salt, so
+        encode_to refuses a switch (its identity check).
     """
     from .schema import validate_columns
 

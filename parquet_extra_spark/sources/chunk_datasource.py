@@ -106,6 +106,7 @@ from pyspark.sql.types import StructType
 
 from ..codecs import decode_array, typemap
 from ..engine import stats as stats_mod
+from ..engine.checkpoint import MANIFEST_TMP_PREFIX, manifest_table
 
 _META_COLS = [
     "chunk_id", "column", "col_idx", "dtype", "codec", "n_values",
@@ -127,7 +128,8 @@ SCHEMA_SIDECAR_PREFIX = "_schema-"
 # POSIX. Atomicity caveat: the stream sink's staging "move" is a rename
 # on local/HDFS but copy+delete on S3-style stores — the commit point is
 # still the manifest append, so a crash mid-move leaves only invisible
-# staged files.
+# staged files. The manifest file itself is moved from a hidden
+# ``_tmp-`` name; an object-store copy makes it visible whole, too.
 
 
 _FS_CACHE: dict = {}
@@ -274,12 +276,14 @@ def schema_sidecar_json(
     run_id: str,
     dataset_id: str = "",
     required: set[str] | None = None,
+    identity: dict | None = None,
 ) -> str:
     """The per-run schema sidecar the commit protocol persists into the
     manifest directory (underscore-prefixed: parquet readers of the
     manifest ignore it). One per encode_to/writer commit; readers merge
     all sidecars at plan time — concurrent writers never read-modify-
-    write a shared schema file."""
+    write a shared schema file. ``identity`` (encode_to only) records
+    the encode settings a resume of the dataset must repeat."""
     req = required or set()
     return json.dumps(
         {
@@ -295,12 +299,22 @@ def schema_sidecar_json(
                 }
                 for c, i, d in sorted(cols, key=lambda t: t[1])
             ],
+            **({"encode": identity} if identity is not None else {}),
         }
     )
 
 
 def _flat_listing(path: str) -> list[str]:
     return _fs_listdir(path)
+
+
+def _has_manifest_parts(manifest: str) -> bool:
+    """Whether a manifest directory holds any committed part file; the
+    hidden ones (sidecars, ``_tmp-`` files in flight) do not count."""
+    return any(
+        f.endswith(".parquet") and not f.startswith(("_", "."))
+        for f in _flat_listing(manifest)
+    )
 
 
 def _committed_runs(
@@ -316,7 +330,7 @@ def _committed_runs(
     # a manifest DIRECTORY that does not exist yet (stream started before
     # the first commit) is legitimately empty; any other read failure
     # (corrupt parquet, permissions) must SURFACE, not read as "no data"
-    if not any(f.endswith(".parquet") for f in _flat_listing(manifest)):
+    if not _has_manifest_parts(manifest):
         return []
     t = _pq_read_table(manifest, columns=want)
     if as_of is None and after is None:
@@ -917,7 +931,7 @@ class ChunkTableStreamReader(DataSourceStreamReader):
     def _runs_times(self) -> dict[str, float]:
         """Committed (run_id -> max committed_at); empty when the first
         commit has not happened yet."""
-        if not any(f.endswith(".parquet") for f in _flat_listing(self._manifest)):
+        if not _has_manifest_parts(self._manifest):
             return {}
         t = _pq_read_table(self._manifest, columns=["run_id", "committed_at"])
         runs: dict[str, float] = {}
@@ -1055,7 +1069,9 @@ def _commit_run(
     """The shared driver-side commit: prune the run dir to the winning
     files, persist the schema + file-list sidecars, THEN append the
     manifest parquet (the commit point — a crash mid-sequence leaves only
-    invisible orphans, never a half-described committed run)."""
+    invisible orphans, never a half-described committed run). The
+    manifest file is written under a hidden ``_tmp-`` name and moved into
+    place, so a crash mid-write never leaves a truncated part file."""
     manifest_dir = os.path.join(path, "manifest")
     _fs_makedirs(manifest_dir)
     run_dir = os.path.join(path, "chunks", f"run_id={run_id}")
@@ -1073,21 +1089,16 @@ def _commit_run(
         os.path.join(manifest_dir, f"{FILES_SIDECAR_PREFIX}{run_id}.json"),
         json.dumps({"run_id": run_id, "files": sorted(winners)}),
     )
-    committed_at = time.time()
-    table = pa.table(
-        {
-            "part_key": pa.array([m.part_key for m in rows], pa.string()),
-            "salt": pa.array([0] * len(rows), pa.int32()),
-            "run_id": pa.array([run_id] * len(rows), pa.string()),
-            "n_chunks": pa.array([m.n_chunks for m in rows], pa.int64()),
-            "n_values": pa.array([m.n_values for m in rows], pa.int64()),
-            "raw_bytes": pa.array([m.raw_bytes for m in rows], pa.int64()),
-            "encoded_bytes": pa.array([m.encoded_bytes for m in rows], pa.int64()),
-            "committed_at": pa.array([committed_at] * len(rows), pa.float64()),
-            "dataset_id": pa.array([dataset_id] * len(rows), pa.string()),
-        }
+    table = manifest_table(
+        [
+            (m.part_key, 0, m.n_chunks, m.n_values, m.raw_bytes, m.encoded_bytes)
+            for m in rows
+        ],
+        run_id, dataset_id, time.time(),
     )
-    _pq_write_table(table, os.path.join(manifest_dir, f"part-w-{run_id}.parquet"))
+    tmp = os.path.join(manifest_dir, f"{MANIFEST_TMP_PREFIX}w-{run_id}.parquet")
+    _pq_write_table(table, tmp)
+    _fs_move(tmp, os.path.join(manifest_dir, f"part-w-{run_id}.parquet"))
 
 
 class ChunkTableArrowWriter(DataSourceArrowWriter):

@@ -134,6 +134,26 @@ def test_encode_to_resume_composes(spark, tmp_path, corpus):
     assert pes.roundtrip_ok(corpus, dec)
 
 
+
+def test_resume_refuses_changed_encode_identity(spark, tmp_path, corpus):
+    """A resume of the same dataset with different unit settings would
+    encode committed rows a second time (here: the salt-1 rows of units
+    committed as salt 0). It raises, naming the keys, and writes nothing;
+    a new dataset_id is an append, not a resume, and is not checked."""
+    import os
+
+    out = str(tmp_path / "enc")
+    kw = dict(partition_cols=["repo", "lang"], chunk_rows=1024)
+    pes.encode_to(corpus, out, assume_clustered=True, **kw)
+    runs = sorted(os.listdir(f"{out}/chunks"))
+    with pytest.raises(ValueError, match="assume_clustered.*n_salts"):
+        pes.encode_to(corpus, out, n_salts=2, **kw)
+    assert sorted(os.listdir(f"{out}/chunks")) == runs
+    assert pes.decode(pes.read_chunks(spark, out)).count() == corpus.count()
+    pes.encode_to(corpus, out, n_salts=2, dataset_id="b2", **kw)
+    assert pes.decode(pes.read_chunks(spark, out)).count() == 2 * corpus.count()
+
+
 def test_hive_partitioned_source(spark, tmp_path, corpus):
     """The motivating layout: a hive/Iceberg-style table partitioned by
     the clustering key (lang=.../ dirs). Each file split holds exactly

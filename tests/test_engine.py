@@ -293,14 +293,118 @@ def test_vacuum_deletes_orphans_only(spark, corpus, tmp_path):
     assert rep["orphan_runs"] == ["deadrun"]
     assert rep["bytes_reclaimed"] > 0
     assert os.path.isdir(f"{out}/chunks/run_id=deadrun")
+    # a manifest temp file left by a crash mid-commit: kept while young,
+    # counted in bytes_reclaimed once stale, reported only on dry_run
+    tmp = f"{out}/manifest/_tmp-deadrun.parquet"
+    with open(tmp, "wb") as fh:
+        fh.write(b"x" * 100)
+    assert pes.vacuum_checkpoint(spark, out, retain_seconds=3600)["bytes_reclaimed"] == 0
+    assert os.path.exists(tmp)
+    rep2 = pes.vacuum_checkpoint(spark, out, retain_seconds=0, dry_run=True)
+    assert rep2["bytes_reclaimed"] == rep["bytes_reclaimed"] + 100
+    assert os.path.exists(tmp)
     # vacuum: the orphan goes, committed data and its readability stay
     rep = pes.vacuum_checkpoint(spark, out, retain_seconds=0)
     assert rep["deleted_runs"] == 1 and rep["orphan_runs"] == ["deadrun"]
+    assert rep["bytes_reclaimed"] == rep2["bytes_reclaimed"]
     assert not os.path.exists(f"{out}/chunks/run_id=deadrun")
+    assert not os.path.exists(tmp)
     assert os.path.isdir(f"{out}/chunks/run_id=goodrun")
     assert pes.roundtrip_ok(corpus, pes.decode(pes.read_chunks(spark, out)))
     # idempotent
     assert pes.vacuum_checkpoint(spark, out, retain_seconds=0)["deleted_runs"] == 0
+
+
+
+_CKPT_KW = dict(partition_cols=["repo", "lang"], chunk_rows=1024, n_buckets=4)
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs started by fn(), counted through a private job group."""
+    import uuid
+
+    sc, tag = spark.sparkContext, f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(tag, tag)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+
+def test_encode_to_fresh_commit_job_budget(spark, corpus, tmp_path):
+    """A fresh encode_to runs the chunk write plus at most two jobs (the
+    narrow aggregate over the run's files): no resume pass, no manifest
+    read, no Spark write of the manifest."""
+    for lane in ({"n_salts": 2}, {"assume_clustered": True}):
+        kw = dict(_CKPT_KW, **lane)
+        base = tmp_path / ("c" if lane.get("assume_clustered") else "d")
+        write = _jobs_of(spark, lambda: (
+            pes.encode(corpus, **kw).withColumn("run_id", F.lit("x"))
+            .write.partitionBy("run_id").parquet(str(base / "plain"))
+        ))
+        total = _jobs_of(spark, lambda: pes.encode_to(corpus, str(base / "ckpt"), **kw))
+        assert total <= write + 2, (lane, write, total)
+
+
+def _manifest_totals(spark, out):
+    m = pes.load_manifest(spark, out)
+    return tuple(m.agg(F.count("*"), F.sum("raw_bytes"), F.sum("encoded_bytes")).collect()[0])
+
+
+@pytest.mark.parametrize("lane", [{"n_salts": 2}, {"assume_clustered": True}])
+def test_encode_to_summary_and_rows_match_manifest(spark, corpus, tmp_path, lane):
+    """The summary (start-time totals + this run) equals an aggregate over
+    the manifest after the call — fresh, full resume, and an append under
+    a new dataset_id — and every unit's n_chunks equals its distinct
+    committed chunks."""
+    out = str(tmp_path / "ckpt")
+    kw = dict(_CKPT_KW, **lane)
+    for dataset_id in ("", "", "batch2"):
+        s = pes.encode_to(corpus, out, dataset_id=dataset_id, **kw)
+        assert (s["units_total"], s["raw_bytes"], s["encoded_bytes"]) == _manifest_totals(spark, out)
+    assert s["rows_skipped_resume"] == 0
+    m = pes.load_manifest(spark, out)
+    assert m.select("run_id").distinct().count() == 2  # the resume committed no units
+    per_unit = {
+        (r["part_key"], r["salt"]): r["n"]
+        for r in m.groupBy("part_key", "salt").agg(F.sum("n_chunks").alias("n")).collect()
+    }
+    committed = {
+        (r["part_key"], r["salt"]): r["n"]
+        for r in pes.read_chunks(spark, out).groupBy("part_key", "salt")
+        .agg(F.countDistinct("chunk_id").alias("n")).collect()
+    }
+    assert per_unit == committed
+    assert pes.decode(pes.read_chunks(spark, out)).count() == 2 * corpus.count()
+
+
+def test_manifest_temp_file_is_invisible(spark, corpus, tmp_path):
+    """A stray manifest/_tmp-* file (a commit that crashed mid-write)
+    holding garbage is ignored by every manifest reader."""
+    from parquet_extra_spark.sources import ChunkTableDataSource
+
+    out = str(tmp_path / "ckpt")
+    kw = dict(_CKPT_KW, n_salts=2)
+    s = pes.encode_to(corpus, out, **kw)
+    with open(f"{out}/manifest/_tmp-x.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    assert pes.load_manifest(spark, out).count() == s["units_total"]
+    n_rows = corpus.count()
+    assert pes.decode(pes.read_chunks(spark, out)).count() == n_rows
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    spark.dataSource.register(ChunkTableDataSource)
+    assert spark.read.format("chunktable").load(out).count() == n_rows
+    # and a resume reads past it too
+    assert pes.encode_to(corpus, out, **kw)["rows_skipped_resume"] == n_rows
+    # a first commit that crashed mid-write: no committed run at all
+    from parquet_extra_spark.sources.chunk_datasource import _committed_runs
+
+    crashed = tmp_path / "crashed"
+    (crashed / "manifest").mkdir(parents=True)
+    (crashed / "manifest" / "_tmp-x.parquet").write_bytes(b"junk")
+    assert _committed_runs(str(crashed / "manifest")) == []
+    assert pes.load_manifest(spark, str(crashed)).count() == 0
 
 
 def test_decode_error_context(spark, corpus_chunks):
