@@ -15,7 +15,7 @@ import os
 import sys
 import time
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
 
 
 # The DRAM probe (worker, aggregate-bandwidth measurement, and health
@@ -26,40 +26,16 @@ from pyspark.sql import SparkSession, functions as F
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "bench"))
 from membw_probe import aggregate_membw_gbps, membw_gate  # noqa: E402
 
-
-def build_spark(cpus: int) -> SparkSession:
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("parquet_extra_spark_bench")
-        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # one Arrow batch ~= one chunk: fewer per-batch crossings on the
-        # JVM<->Python pipe (bench/conf_probe.py: 3.0-3.3s vs 3.3-3.8s
-        # encode at the 10k default; shuffle compression must stay ON —
-        # uncompressed 1.8 GB through tmpfs saturates DRAM, 2-8x slower)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "48g"))
-        .config("spark.ui.enabled", "false")
-    )
-    # shuffle to tmpfs when present (cluster nodes shuffle to local NVMe;
-    # the sandbox overlay disk would serialize the measured pipeline)
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        shm = "/dev/shm/spark-graft-tmp"
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
-    return builder.getOrCreate()
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from parquet_extra_spark.session import build_spark  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = sf_dir.rstrip("/").split("sf")[-1]
-    spark = build_spark(cpus)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark("parquet_extra_spark_bench", cpus)
 
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     import parquet_extra_spark as pes
     from parquet_extra_spark.sources import code_corpus
     import __spark_entry__ as entry_mod
@@ -74,10 +50,12 @@ def main() -> None:
     # representative rather than artifacts of a toy input
     n_corpus = int(os.environ.get("SPARK_GRAFT_CORPUS_ROWS", "1000000"))
     # 4 tasks per core: (bucket,salt) units are one task each and hash
-    # unevenly, so 2 units/core leaves a straggler tail (bench/
-    # unit_probe.py: 64 units 6.2-13.1s vs 128 units 2.9s on the same
-    # corpus); finer units let the scheduler rebalance. Chunks stay big
-    # enough for zstd windows at 1M rows (7812 rows ~ 13 MB content).
+    # unevenly, so 2 units/core leaves a straggler tail
+    # (`git show 4d080a7:bench/unit_probe.py`: 64 units 6.2-13.1s vs 128
+    # units 2.9s on the same corpus); finer units let the scheduler
+    # rebalance.
+    # Chunks stay big enough for zstd windows at 1M rows (7812 rows ~
+    # 13 MB content).
     n_units = cpus * 4
     chunk_rows = max(4096, min(65536, n_corpus // n_units))
     corpus = code_corpus(spark, n_rows=n_corpus).cache()
@@ -104,11 +82,12 @@ def main() -> None:
     # JIT (C2 compilation of the codegen'd exchange/scan stages), Python
     # worker spawn + numpy/pyarrow imports, and page-cache faults — on
     # this host that's a measured 31.5s first encode vs 2.5-3.0s steady
-    # state (cache_cost.py run table, 2026-08-17). A 10k-row warmup does
-    # NOT warm the full path (different batch shapes compile different
-    # code). Warm-up is ADAPTIVE because convergence takes SEVERAL full
-    # runs, not one (measured decay on this host: 29.7 -> 12.4 -> 5.7 ->
-    # 4.4 -> 2.7s, then flat): a single warm-up leaves the first timed
+    # state (`git show 4d080a7:bench/cache_cost.py` run table,
+    # 2026-08-17). A 10k-row warmup does NOT warm the full path
+    # (different batch shapes compile different code). Warm-up is
+    # ADAPTIVE because convergence takes SEVERAL full runs, not one
+    # (measured decay on this host: 29.7 -> 12.4 -> 5.7 -> 4.4 -> 2.7s,
+    # then flat): a single warm-up leaves the first timed
     # attempts mid-decay, and the "jointly fast" early stop can then lock
     # a still-warming 12s sample in as the committed artifact. Keep
     # warming until the improvement over the previous run falls under
@@ -125,9 +104,10 @@ def main() -> None:
     # PAIRED interleaved repeats against the parquet-zstd comparator.
     #
     # The sandbox host has multi-minute throttling windows: identical
-    # jobs vary 3-10x wall-clock (bench/bisect_bench.py run tables:
-    # the same no-cache encode measured 2.5s and 17.8s within 30 min;
-    # a clustered parquet write measured 1.85s and 38.1s in ONE loop).
+    # jobs vary 3-10x wall-clock (`git show 4d080a7:bench/bisect_bench.py`
+    # run tables: the same no-cache encode measured 2.5s and 17.8s
+    # within 30 min; a clustered parquet write measured 1.85s and 38.1s
+    # in ONE loop).
     # min(engine) vs min(parquet) across attempts is therefore BIASED:
     # the short parquet job (~2s) fits inside fast micro-bursts that the
     # longer encode job (~3s, 10-30s when throttled) straddles, so the
@@ -167,9 +147,10 @@ def main() -> None:
 
     # window probe: a small mapInArrow pass-through. The host's throttle
     # windows hit the JVM<->Python Arrow pipe far harder than JVM-only
-    # work (bench/phase_probe.py: encode 41s vs parquet 4.5s in the same
-    # throttled round, 4.9s vs 2.9s un-throttled) — so the probe must
-    # exercise the pipe itself; a JVM agg reads "fast" mid-throttle.
+    # work (`git show 4d080a7:bench/phase_probe.py`: encode 41s vs
+    # parquet 4.5s in the same throttled round, 4.9s vs 2.9s
+    # un-throttled) — so the probe must exercise the pipe itself; a JVM
+    # agg reads "fast" mid-throttle.
     import pyarrow as _pa
 
     def _probe_fn(batches):

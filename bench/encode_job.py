@@ -5,7 +5,9 @@ Run via spark-submit or plain python at one parallelism level:
 Reads the same parquet input regardless of level (identical work), does a
 warm-up pass, then measures the full encode pipeline (shuffle + sort +
 codec selection + encode + chunk-table materialization). Prints one JSON
-line {cpus, seconds, raw_bytes, gbps, encoded_bytes}.
+line {cpus, seconds, raw_bytes, gbps, encoded_bytes, n_rows, master}.
+Under spark-submit the launcher's --master wins; ``--cpus`` then only
+sizes the work (partitions), not the master.
 """
 
 from __future__ import annotations
@@ -18,7 +20,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import functions as F
+
+from parquet_extra_spark.session import build_spark
 
 
 def main() -> None:
@@ -28,28 +32,7 @@ def main() -> None:
     ap.add_argument("--rounds", type=int, default=3)
     args = ap.parse_args()
 
-    builder = (
-        SparkSession.builder.master(f"local[{args.cpus}]")
-        .appName(f"encode_scaling_{args.cpus}")
-        .config("spark.sql.shuffle.partitions", str(max(args.cpus, 8)))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # align with bench.py's tuned pipe: one Arrow batch ~= one chunk
-        # (bench/conf_probe.py run table; same setting in build_spark)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "40g"))
-        .config("spark.ui.enabled", "false")
-    )
-    # Shuffle to tmpfs when present: a cluster node shuffles to local NVMe;
-    # this sandbox's overlay disk would otherwise put a serial disk in the
-    # middle of the measured pipeline.
-    if os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        shm = "/dev/shm/spark-graft-tmp"
-        os.makedirs(shm, exist_ok=True)
-        builder = builder.config("spark.local.dir", shm)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark(f"encode_scaling_{args.cpus}", args.cpus)
     import parquet_extra_spark as pes
 
     # The small bench parquet collapses to a handful of input splits, which
@@ -117,6 +100,7 @@ def main() -> None:
                 "gbps": round(raw_bytes / 1e9 / best, 4),
                 "encoded_bytes": int(encoded),
                 "n_rows": n_rows,
+                "master": spark.sparkContext.master,
             }
         )
     )

@@ -96,18 +96,9 @@ def main() -> None:
     only = set(argv[1:])
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entry_mod
-    from pyspark.sql import SparkSession
+    from parquet_extra_spark.session import build_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("oracle_check")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark("oracle_check", cpus=8)
 
     con = duckdb.connect()
     for t in TABLES:

@@ -39,8 +39,6 @@ def recall(approx_ids: list[int], exact_ids: list[int]) -> float:
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     from parquet_extra_spark.operators.similarity import (
         brute_force_topk,
         ivfpq_topk,
@@ -48,6 +46,7 @@ def main() -> None:
         pq_topk,
         train_pq_codebooks,
     )
+    from parquet_extra_spark.session import build_spark
 
     known = ("--k=", "--queries=", "--json=")
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
@@ -73,14 +72,7 @@ def main() -> None:
     json_path = _opt("json", None)
     nprobes = [1, 2, 4, 8, 16]
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark("recall_pq", cpus=8)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").cache()
     rows = emb.select("vec_id", "embedding").orderBy("vec_id").collect()

@@ -65,16 +65,10 @@ from membw_probe import aggregate_membw_gbps, membw_gate  # noqa: E402
 
 
 def generate_input(path: str, n_rows: int) -> None:
-    from pyspark.sql import SparkSession
-
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "32g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    from parquet_extra_spark.session import build_spark
     from parquet_extra_spark.sources import code_corpus
+
+    spark = build_spark("scaling_input", cpus=32)
 
     code_corpus(spark, n_rows=n_rows).write.mode("overwrite").parquet(path)
     spark.stop()

@@ -12,16 +12,9 @@ composes (every row skipped). Prints one JSON line, cleans up.
 
 import json, os, shutil, sys, time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-from pyspark.sql import SparkSession, functions as F
-os.makedirs("/dev/shm/spark-graft-tmp", exist_ok=True)
-spark = (SparkSession.builder.master("local[32]")
-    .config("spark.sql.shuffle.partitions","64")
-    .config("spark.sql.adaptive.enabled","true")
-    .config("spark.sql.execution.arrow.pyspark.enabled","true")
-    .config("spark.sql.execution.arrow.maxRecordsPerBatch","65536")
-    .config("spark.driver.memory","48g").config("spark.ui.enabled","false")
-    .config("spark.local.dir","/dev/shm/spark-graft-tmp").getOrCreate())
-spark.sparkContext.setLogLevel("FATAL")
+from pyspark.sql import functions as F
+from parquet_extra_spark.session import build_spark
+spark = build_spark("soak_preclustered", cpus=32, shuffle_partitions=64)
 import parquet_extra_spark as pes
 from parquet_extra_spark.sources import code_corpus
 

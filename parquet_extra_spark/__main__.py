@@ -16,7 +16,9 @@
 Each command prints ONE JSON line (machine-consumable, same contract as
 bench.py). This module is also the natural spark-submit target:
 `spark-submit --py-files pkg.zip cli.py ...` with cli.py importing
-parquet_extra_spark.__main__:main (see bench/submit.sh).
+parquet_extra_spark.__main__:main (see bench/submit.sh). The session
+comes from parquet_extra_spark.session: an explicit --master wins, else
+spark-submit's --master, else local[*].
 
 Checkpoint-layout directories (encode_to output) are detected by their
 manifest; `decode`'s as-of/after expose the snapshot / incremental reads.
@@ -29,27 +31,24 @@ import json
 import sys
 
 
-def _spark(args):
-    from pyspark.sql import SparkSession
-
-    builder = (
-        SparkSession.builder.master(args.master)
-        .appName("parquet_extra_spark_cli")
-        .config("spark.sql.shuffle.partitions", str(args.shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.ui.enabled", "false")
-    )
-    return builder.getOrCreate()
-
-
 def _cols(s: str | None) -> list[str] | None:
     return [c for c in s.split(",") if c] if s else None
 
 
+def _agg_specs(s: str) -> list[tuple[str, str, str]]:
+    specs = []
+    for spec in s.split(","):
+        parts = spec.split(":")
+        if len(parts) != 3:
+            raise SystemExit(f"bad agg spec {spec!r}: want fn:col:alias")
+        specs.append((parts[0], parts[1], parts[2]))
+    return specs
+
+
 def _add_common(p: argparse.ArgumentParser) -> None:
-    p.add_argument("--master", default="local[*]")
+    # no default: under spark-submit the launcher's --master applies, and
+    # a plain `python -m` run falls back to local[*] (session.build_spark)
+    p.add_argument("--master", default=None)
     p.add_argument("--shuffle-partitions", type=int, default=32)
 
 
@@ -139,9 +138,12 @@ def build_parser() -> argparse.ArgumentParser:
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     import parquet_extra_spark as pes
+    from parquet_extra_spark.session import build_spark
 
-    spark = _spark(args)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = build_spark(
+        "parquet_extra_spark_cli", master=args.master,
+        shuffle_partitions=args.shuffle_partitions,
+    )
     out: dict
 
     if args.cmd == "encode":
@@ -194,23 +196,13 @@ def main(argv: list[str] | None = None) -> int:
         }
     elif args.cmd == "agg":
         chunks = pes.read_chunks(spark, args.enc, as_of=args.as_of)
-        specs = []
-        for spec in args.aggs.split(","):
-            parts = spec.split(":")
-            if len(parts) != 3:
-                raise SystemExit(f"bad agg spec {spec!r}: want fn:col:alias")
-            specs.append((parts[0], parts[1], parts[2]))
+        specs = _agg_specs(args.aggs)
         rows = pes.group_agg_encoded(
             chunks, _cols(args.keys), specs, colocated=False
         ).collect()
         out = {"cmd": "agg", "rows": [r.asDict() for r in rows]}
     elif args.cmd == "refresh":
-        specs = []
-        for spec in args.aggs.split(","):
-            parts = spec.split(":")
-            if len(parts) != 3:
-                raise SystemExit(f"bad agg spec {spec!r}: want fn:col:alias")
-            specs.append((parts[0], parts[1], parts[2]))
+        specs = _agg_specs(args.aggs)
         ca = pes.ContinuousAggregate(args.enc, args.state,
                                      _cols(args.keys), specs)
         out = {"cmd": "refresh", **ca.refresh(spark)}

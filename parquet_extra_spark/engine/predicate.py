@@ -404,13 +404,17 @@ def to_spark(pred: Pred) -> Column:
 
 
 def _typed(col: Column, dtype: str) -> Column:
-    """Stored stats string -> comparable typed value (decimals compare
-    exactly via a decimal cast, no double rounding). ``try_cast``: Catalyst
-    may evaluate these casts on chunk rows of OTHER columns before the
-    ``column`` filter drops them (common-subexpression evaluation), and
-    an ANSI cast of, say, a string stat to double would raise there;
-    stats of the column itself always parse."""
-    if dtype in _NUMERIC:
+    """Stored stats string -> comparable typed value. Integers compare
+    exactly as bigint (a double cast rounds stats past 2**53 together and
+    mis-prunes) and decimals via a decimal cast; a float literal against
+    a bigint stat then coerces to double exactly as the row filter does.
+    ``try_cast``: Catalyst may evaluate these casts on chunk rows of OTHER
+    columns before the ``column`` filter drops them (common-subexpression
+    evaluation), and an ANSI cast of, say, a string stat to double would
+    raise there; stats of the column itself always parse."""
+    if dtype in typemap.INT_DTYPES:
+        return col.try_cast("bigint")
+    if dtype in typemap.FLOAT_DTYPES:
         return col.try_cast("double")
     if typemap.is_decimal(dtype):
         return col.try_cast(dtype)

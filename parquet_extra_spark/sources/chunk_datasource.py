@@ -107,6 +107,7 @@ from pyspark.sql.types import StructType
 from ..codecs import decode_array, typemap
 from ..engine import stats as stats_mod
 from ..engine.checkpoint import MANIFEST_TMP_PREFIX, manifest_table
+from ..engine.predicate import prefix_successor
 
 _META_COLS = [
     "chunk_id", "column", "col_idx", "dtype", "codec", "n_values",
@@ -326,25 +327,27 @@ def _committed_runs(
     Wall-clock caveat applies (see read_chunks): exact for a single
     sequential writer per checkpoint dir; for incremental consumption
     under concurrent writers use the STREAM source (run-id-set offsets)."""
-    want = ["run_id"] if as_of is None and after is None else ["run_id", "committed_at"]
+    return sorted(
+        r
+        for r, c in _run_commit_times(manifest).items()
+        if (as_of is None or c <= as_of) and (after is None or c > after)
+    )
+
+
+def _run_commit_times(manifest: str) -> dict[str, float]:
+    """Committed run_id -> max(committed_at) over its manifest rows."""
     # a manifest DIRECTORY that does not exist yet (stream started before
     # the first commit) is legitimately empty; any other read failure
     # (corrupt parquet, permissions) must SURFACE, not read as "no data"
     if not _has_manifest_parts(manifest):
-        return []
-    t = _pq_read_table(manifest, columns=want)
-    if as_of is None and after is None:
-        return sorted(set(t.column("run_id").to_pylist()))
+        return {}
+    t = _pq_read_table(manifest, columns=["run_id", "committed_at"])
     runs: dict[str, float] = {}
     for r, c in zip(
         t.column("run_id").to_pylist(), t.column("committed_at").to_pylist()
     ):
         runs[r] = max(runs.get(r, c), c)
-    return sorted(
-        r
-        for r, c in runs.items()
-        if (as_of is None or c <= as_of) and (after is None or c > after)
-    )
+    return runs
 
 
 FILES_SIDECAR_PREFIX = "_files-"
@@ -437,12 +440,18 @@ def _merge_schema_entries(
     return cols, nullable
 
 
-def _load_sidecars(manifest: str) -> list[dict]:
-    out = []
-    for name in sorted(_fs_listdir(manifest)):
-        if name.startswith(SCHEMA_SIDECAR_PREFIX) and name.endswith(".json"):
-            out.append(json.loads(_fs_read_text(os.path.join(manifest, name))))
-    return out
+def _load_sidecars(manifest: str, runs: set[str]) -> list[dict]:
+    """The schema sidecars of the given committed runs, chosen by file
+    name (``_schema-<run_id>.json``) before any is parsed: a sidecar left
+    half-written by a crashed, uncommitted run is never opened. A
+    committed run's sidecar is always whole — every writer closes it
+    before the manifest rename that commits the run."""
+    names = {f"{SCHEMA_SIDECAR_PREFIX}{r}.json" for r in runs}
+    return [
+        json.loads(_fs_read_text(os.path.join(manifest, name)))
+        for name in sorted(_fs_listdir(manifest))
+        if name in names
+    ]
 
 
 def _file_schema_entries(f: str) -> dict:
@@ -469,14 +478,8 @@ def _discover_schema(
     root, manifest = _chunks_root(path)
     if manifest is not None:
         runs = _committed_runs(manifest, as_of, after)
-        run_set = set(runs)
-        sidecars = [
-            sc
-            for sc in _load_sidecars(manifest)
-            # version-0 sidecars carry no run_id: keep (schema superset)
-            if sc.get("run_id") is None or sc["run_id"] in run_set
-        ]
-        covered = {sc["run_id"] for sc in sidecars if sc.get("run_id")}
+        sidecars = _load_sidecars(manifest, set(runs))
+        covered = {sc["run_id"] for sc in sidecars}
         # committed runs WITHOUT a sidecar (written by pre-sidecar code, or
         # a legacy mixed checkpoint): schema is uniform within a run, so
         # one data-file read per uncovered run recovers their columns —
@@ -527,16 +530,6 @@ def _canon(value, dtype: str):
     return None
 
 
-def _prefix_successor(p: str) -> str | None:
-    """Smallest string greater than every string with prefix ``p`` (the
-    exclusive upper bound of the LIKE 'p%' range), or None when no such
-    string exists (all code points maxed out)."""
-    for i in range(len(p) - 1, -1, -1):
-        if ord(p[i]) < 0x10FFFF:
-            return p[:i] + chr(ord(p[i]) + 1)
-    return None
-
-
 @dataclass(frozen=True)
 class _Leaf:
     """One pruning leaf: op in (eq ne lt le gt ge prefix isnull notnull),
@@ -568,7 +561,7 @@ def _leaf_possible(leaf: _Leaf, st: dict, dtype: str) -> bool:
         mn, mx = st["min_val"], st["max_val"]
         if mx is not None and mx < p:
             return False
-        succ = _prefix_successor(p)
+        succ = prefix_successor(p)
         if succ is not None and mn is not None and mn >= succ:
             return False
         return True
@@ -931,15 +924,7 @@ class ChunkTableStreamReader(DataSourceStreamReader):
     def _runs_times(self) -> dict[str, float]:
         """Committed (run_id -> max committed_at); empty when the first
         commit has not happened yet."""
-        if not _has_manifest_parts(self._manifest):
-            return {}
-        t = _pq_read_table(self._manifest, columns=["run_id", "committed_at"])
-        runs: dict[str, float] = {}
-        for r, c in zip(
-            t.column("run_id").to_pylist(), t.column("committed_at").to_pylist()
-        ):
-            runs[r] = max(runs.get(r, c), c)
-        return runs
+        return _run_commit_times(self._manifest)
 
     def latestOffset(self) -> dict:
         if self._slack is None:
@@ -1343,17 +1328,19 @@ class ChunkTableDataSource(DataSource):
             offset_slack=float(slack_opt) if slack_opt else None,
         )
 
-    def writer(self, schema: StructType, overwrite: bool) -> ChunkTableArrowWriter:
+    def _writer_args(self, schema: StructType, overwrite: bool) -> dict:
+        """Path, schema and encode options shared by the batch and the
+        stream writer, validated the same way for both."""
         from ..engine.schema import from_struct
 
         if overwrite:
             raise ValueError(
-                "chunktable is append-only (the manifest is the commit log);"
-                " use mode('append')"
+                "chunktable is append-only (the manifest is the commit log):"
+                " write in append mode"
             )
         path = self.options.get("path")
         if not path:
-            raise ValueError("chunktable needs a path: .save('/dir')")
+            raise ValueError("chunktable needs a path to write to")
         sort_opt = self.options.get("sort_cols")
         sort_cols = (
             [c.strip() for c in sort_opt.split(",") if c.strip()] if sort_opt else None
@@ -1363,42 +1350,24 @@ class ChunkTableDataSource(DataSource):
         bad = [c for c in (sort_cols or []) if c not in known]
         if bad:
             raise ValueError(f"sort_cols references unknown columns: {bad}")
-        return ChunkTableArrowWriter(
-            path,
-            run_id=uuid.uuid4().hex[:12],
+        return dict(
+            path=path,
             schema_cols=schema_cols,
             chunk_rows=int(self.options.get("chunk_rows", 65536)),
             sort_cols=sort_cols,
             dataset_id=self.options.get("dataset_id", ""),
+        )
+
+    def writer(self, schema: StructType, overwrite: bool) -> ChunkTableArrowWriter:
+        return ChunkTableArrowWriter(
+            run_id=uuid.uuid4().hex[:12],
+            **self._writer_args(schema, overwrite),
         )
 
     def streamWriter(
         self, schema: StructType, overwrite: bool
     ) -> ChunkTableStreamArrowWriter:
-        from ..engine.schema import from_struct
-
-        if overwrite:
-            raise ValueError(
-                "chunktable is append-only (the manifest is the commit log);"
-                " use outputMode('append')"
-            )
-        path = self.options.get("path")
-        if not path:
-            raise ValueError("chunktable needs a path: .start('/dir')")
-        sort_opt = self.options.get("sort_cols")
-        sort_cols = (
-            [c.strip() for c in sort_opt.split(",") if c.strip()] if sort_opt else None
-        )
-        schema_cols = from_struct(schema)
-        known = {c for c, _, _ in schema_cols}
-        bad = [c for c in (sort_cols or []) if c not in known]
-        if bad:
-            raise ValueError(f"sort_cols references unknown columns: {bad}")
         return ChunkTableStreamArrowWriter(
-            path,
-            schema_cols=schema_cols,
-            chunk_rows=int(self.options.get("chunk_rows", 65536)),
-            sort_cols=sort_cols,
-            dataset_id=self.options.get("dataset_id", ""),
             sink_id=self.options.get("sink_id", "q"),
+            **self._writer_args(schema, overwrite),
         )

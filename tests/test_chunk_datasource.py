@@ -142,12 +142,6 @@ def test_member_digest_prunes_eq():
 def test_prefix_pruning_leaf_and_behavior(registered, spark, tmp_path):
     """LIKE 'p%' prunes via [p, successor(p)): unit verdicts + poisoned-
     payload behavioral proof that out-of-range chunks never decode."""
-    from parquet_extra_spark.sources.chunk_datasource import _prefix_successor
-
-    assert _prefix_successor("ab") == "ac"
-    assert _prefix_successor("a" + chr(0x10FFFF)) == "b"
-    assert _prefix_successor(chr(0x10FFFF)) is None
-
     st = {
         "null_count": 0, "n_values": 10, "min_val": "cat", "max_val": "dog",
         "member_hashes": None, "member_bloom": None,
@@ -249,6 +243,24 @@ def test_schema_plans_from_manifest_sidecar_only(registered, spark, docs, tmp_pa
     assert [(f.name, f.dataType.simpleString()) for f in got.schema.fields] == [
         (f.name, f.dataType.simpleString()) for f in docs.schema.fields
     ]
+
+
+def test_half_written_uncommitted_sidecar_is_never_parsed(
+    registered, spark, docs, tmp_path
+):
+    """A crashed, uncommitted run can leave a truncated schema sidecar
+    behind; planning picks sidecars by committed run_id before parsing,
+    so both read surfaces return exactly the committed rows."""
+    out = str(tmp_path / "enc")
+    pes.encode_to(docs, out, partition_cols=["lang"], chunk_rows=256,
+                  n_buckets=2, n_salts=1)
+    with open(os.path.join(out, "manifest", "_schema-x.json"), "w") as fh:
+        fh.write('{"version": 1, "run_id": "x", "colu')
+    want = sorted(map(tuple, docs.collect()))
+    got = registered.read.format("chunktable").load(out)
+    assert sorted(map(tuple, got.select(*docs.columns).collect())) == want
+    dec = pes.decode_checkpoint(spark, out)
+    assert sorted(map(tuple, dec.select(*docs.columns).collect())) == want
 
 
 def test_columns_option_decodes_only_requested(registered, spark, docs, flat_dir, tmp_path):

@@ -91,6 +91,25 @@ def test_delete_null_rows_survive(spark):
         assert delete_stats(chunks, pred)["chunks_dropped"] == 0, pred
 
 
+def test_delete_keeps_bigint_rows_past_2_pow_53(spark):
+    """A double cast of the bigint stats read the chunk [2**53, 2**53+1]
+    as max == 2**53, so `x <= 2**53` certain-dropped it and deleted the
+    row 2**53+1, which SQL DELETE keeps."""
+    base = 2**53
+    df = spark.createDataFrame(
+        [(i, base + i) for i in range(4)], "k int, x bigint"
+    )
+    chunks = pes.encode(df, sort_cols=["x"], unit_sort=True, chunk_rows=2,
+                        n_buckets=1, n_salts=1)
+    for pred, sql in [
+        (pes.P.le("x", base), F.col("x") <= base),
+        (pes.P.lt("x", base + 1), F.col("x") < base + 1),
+    ]:
+        out = pes.delete_where(chunks, pred, chunk_rows=2)
+        want = _rows(df.filter(~F.coalesce(sql, F.lit(False))))
+        assert _rows(pes.decode(out).select(*df.columns)) == want, pred
+
+
 def test_delete_unknown_column_raises(spark, docs):
     chunks = pes.encode(docs, chunk_rows=256, n_buckets=2, n_salts=1)
     with pytest.raises(ValueError):

@@ -447,3 +447,29 @@ def test_isin_large_set_certain_drop(spark):
     st = delete_stats(chunks, P.isin("g", values))
     assert st["chunks_dropped"] == 2 and st["chunks_rewritten"] == 0, st
     chunks.unpersist()
+
+
+def test_bigint_stats_compare_exactly_past_2_pow_53(spark):
+    """Integer chunk stats compare as bigint: a double cast rounds
+    2**53+1 down to 2**53, so the chunk [2**53, 2**53+1] read as
+    max == 2**53 and `x > 2**53` skipped the row 2**53+1. A float
+    literal coerces to double on both the stats and the row side."""
+    base = 2**53
+    df = spark.createDataFrame(
+        [(i, base + i) for i in range(4)], "k int, x bigint"
+    )
+    chunks = pes.encode(df, sort_cols=["x"], unit_sort=True, chunk_rows=2,
+                        n_buckets=1, n_salts=1)
+    for pred, cond in [
+        (P.gt("x", base), F.col("x") > base),
+        (P.ge("x", base + 1), F.col("x") >= base + 1),
+        (P.lt("x", base + 2), F.col("x") < base + 2),
+        (P.eq("x", base + 1), F.col("x") == base + 1),
+        (P.gt("x", float(base)), F.col("x") > float(base)),
+    ]:
+        got = sorted(
+            tuple(r)
+            for r in pes.filter_decode_pred(chunks, pred, colocated=True)
+            .select(*df.columns).collect()
+        )
+        assert got == sorted(tuple(r) for r in df.filter(cond).collect()), pred

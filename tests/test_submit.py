@@ -5,7 +5,8 @@ multi-executor clusters").
 bench/submit.sh packages parquet_extra_spark into a zip and submits
 bench/encode_job.py against the given master. This test drives the real
 script (subprocess spark-submit, its own JVM) on a tiny deterministic
-corpus at local[2] and checks the job's one-line JSON contract. The zip,
+corpus at local[2] and checks the job's one-line JSON contract, including
+that the job ran on the launcher's master. The zip,
 not the repo checkout, must be sufficient for the executors — the engine
 is pure Python over numpy/pyarrow, so the zip is the whole artifact.
 """
@@ -31,7 +32,10 @@ def test_spark_submit_py_files_encode_job(spark, tmp_path):
     code_corpus(spark, n_rows=5000).write.mode("overwrite").parquet(inp)
 
     env = dict(os.environ)
-    env.update({"MASTER": "local[2]", "CPUS": "2", "SPARK_GRAFT_MEM": "4g"})
+    # CPUS differs from the master's core count: the launcher's --master
+    # must win over the job's local[cpus] fallback (a master set in code
+    # would silently override spark-submit's flag)
+    env.update({"MASTER": "local[2]", "CPUS": "3", "SPARK_GRAFT_MEM": "4g"})
     proc = subprocess.run(
         [os.path.join(REPO, "bench", "submit.sh"), "--input", inp, "--rounds", "1"],
         env=env,
@@ -44,7 +48,8 @@ def test_spark_submit_py_files_encode_job(spark, tmp_path):
     lines = [l for l in proc.stdout.splitlines() if l.startswith("{")]
     assert len(lines) == 1, proc.stdout[-2000:]
     out = json.loads(lines[0])
-    assert out["cpus"] == 2
+    assert out["cpus"] == 3
+    assert out["master"] == "local[2]"
     assert out["n_rows"] == 5000
     assert out["raw_bytes"] > 0
     assert 0 < out["encoded_bytes"] < out["raw_bytes"]
