@@ -172,6 +172,8 @@ def to_int64_values(arr: pa.Array, dtype: str) -> tuple[np.ndarray, np.ndarray]:
         arr = arr.cast(SPARK_TO_ARROW[dtype])
     elif is_decimal(dtype):
         arr = decimal_to_unscaled(arr, dtype)
+    elif dtype == "date":
+        arr = arr.cast(pa.int32())  # pyarrow casts date32 to int32 only
     filled = arr.cast(pa.int64()).fill_null(0)
     return filled.to_numpy(zero_copy_only=False).astype(np.int64), mask
 
@@ -180,6 +182,8 @@ def from_int64_values(vals: np.ndarray, mask: np.ndarray, dtype: str) -> pa.Arra
     base = pa.array(vals.astype(np.int64), type=pa.int64(), mask=mask)
     if is_decimal(dtype):
         return unscaled_to_decimal(base, dtype)
+    if dtype == "date":
+        base = base.cast(pa.int32())
     return base.cast(spark_to_arrow(dtype))
 
 

@@ -19,7 +19,7 @@ the commit point):
    A fresh dataset skips every resume step. For a dataset with committed
    units, the run's encode identity must match the committed runs'
    sidecars, and the source's rows of those units are dropped by a
-   broadcast left_anti join.
+   broadcast left_anti join against the units already collected.
 2. Chunks for pending units are written under a fresh run_id — the only
    full pass over the data.
 3. The manifest rows are derived from the written files with one narrow
@@ -30,8 +30,8 @@ the commit point):
    and ``_``-prefixed files are invisible to Spark and pyarrow readers,
    so a crash leaves either no commit or a whole one. A crash before the
    rename leaves orphan chunk files under a run_id that never reaches
-   the manifest; ``read_chunks`` joins chunks against the manifest on
-   (part_key, salt, run_id), so orphans are invisible and the unit is
+   the manifest; ``read_chunks`` reads only the run directories of
+   committed run ids, so orphans are invisible and the unit is
    re-encoded on resume — exactly-once output. ``vacuum_checkpoint``
    reclaims the orphans and stale temp files.
 
@@ -135,15 +135,70 @@ def _hadoop_write(spark, path: str, data: bytes) -> None:
         out.close()
 
 
-def _hadoop_read_text(spark, path: str) -> str | None:
+def _hadoop_read_bytes(spark, path: str) -> bytes | None:
     fs, p = _hadoop_path(spark, path)
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
-        return spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return bytes(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
     finally:
         stream.close()
+
+
+def _hadoop_read_text(spark, path: str) -> str | None:
+    data = _hadoop_read_bytes(spark, path)
+    return None if data is None else data.decode("utf-8")
+
+
+def _hadoop_list(spark, path: str) -> list:
+    """Visible entries (FileStatus) of a directory, [] when it is absent.
+    Hidden names (``_``/``.`` prefixes: sidecars, temp files, checksums)
+    are skipped, as Spark's file listing skips them."""
+    fs, p = _hadoop_path(spark, path)
+    if not fs.exists(p):
+        return []
+    return [
+        st for st in fs.listStatus(p)
+        if not st.getPath().getName().startswith(("_", "."))
+    ]
+
+
+def _run_commit_times(spark, out_dir: str) -> dict[str, float | None]:
+    """Committed run_id -> max(committed_at) over its manifest rows, read
+    on the driver: one listing plus one read per manifest file (one file
+    per committed run), no Spark job. A run whose rows carry no
+    committed_at maps to None."""
+    runs: dict[str, float | None] = {}
+    for st in _hadoop_list(spark, _manifest_path(out_dir)):
+        if st.isDirectory():
+            continue
+        path = st.getPath().toString()
+        data = _hadoop_read_bytes(spark, path)
+        if data is None:  # committed manifest files are never deleted
+            raise FileNotFoundError(f"manifest file vanished while listed: {path}")
+        table = pq.read_table(pa.BufferReader(data))
+        stamps = (
+            table.column("committed_at").to_pylist()
+            if "committed_at" in table.column_names else [None] * table.num_rows
+        )
+        for rid, at in zip(table.column("run_id").to_pylist(), stamps):
+            prev = runs.get(rid, at)
+            runs[rid] = None if prev is None or at is None else max(prev, at)
+    return runs
+
+
+def _committed_runs(
+    spark, out_dir: str, as_of: float | None = None, after: float | None = None
+) -> list[str]:
+    """Committed run ids whose commit time passes the as_of/after cut. A
+    run commits whole, so its rows share one ``committed_at``."""
+    return sorted(
+        rid
+        for rid, at in _run_commit_times(spark, out_dir).items()
+        if (as_of is None or (at is not None and at <= as_of))
+        and (after is None or (at is not None and at > after))
+    )
 
 
 def _sidecar_path(out_dir: str, run_id: str) -> str:
@@ -345,14 +400,13 @@ def encode_to(
         src = df.withColumn(
             "__pe_unit_pk", F.concat(F.lit("b"), bucket_expr.cast("string"))
         ).withColumn("__pe_unit_salt", salt_expr)
+        # the committed units were collected by _manifest_state already:
+        # no second read of the manifest
         done_units = F.broadcast(
-            load_manifest(spark, out_dir)
-            .filter(F.col("dataset_id") == dataset_id)
-            .select(
-                F.col("part_key").alias("__pe_unit_pk"),
-                F.col("salt").alias("__pe_unit_salt"),
+            spark.createDataFrame(
+                sorted({(pk, salt) for pk, salt, _ in done}),
+                "__pe_unit_pk string, __pe_unit_salt int",
             )
-            .distinct()
         )
         keys = ["__pe_unit_pk", "__pe_unit_salt"]
         pending_src = src.join(done_units, keys, "left_anti").drop(*keys)
@@ -414,24 +468,37 @@ def read_chunks(
     as_of: float | None = None,
     after: float | None = None,
 ) -> DataFrame:
-    """Committed chunks only: join against the manifest on
-    (part_key, salt, run_id) so orphans from crashed runs are invisible.
+    """Committed chunks only, planned on the driver from the manifest.
+
+    The driver lists the committed run ids (through the Hadoop FS, so any
+    path Spark can write works), cuts them by ``committed_at``, and reads
+    ``chunks/run_id=<r>`` of each kept run with the chunk schema given:
+    no footer inference, no semi-join, no Spark job. Orphans from crashed
+    runs are invisible because their run id never reaches the manifest.
+
+    Reading whole runs returns the same rows as a unit-level join against
+    the manifest: every unit a run commits lands in that run's single
+    manifest file (``encode_to`` derives the rows from the files the run
+    wrote), and the SQL writer deletes losing task attempts' files
+    before it commits. The run directories are Spark's root paths; past
+    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` runs,
+    Spark lists them with a job of its own.
 
     The manifest is append-only (exactly one row per committed work
     unit), so its ``committed_at`` column is a consistent ingest
     frontier — two snapshot forms come for free, the Iceberg
-    snapshot-read / incremental-scan analogue at unit granularity:
+    snapshot-read / incremental-scan analogue at run granularity:
 
-    * ``as_of=T`` — time travel: only units committed at or before T
+    * ``as_of=T`` — time travel: only runs committed at or before T
       (the table exactly as a reader at time T saw it; an interrupted
       ingest's later resume never bleeds in).
-    * ``after=T`` — incremental consumption: only units committed
+    * ``after=T`` — incremental consumption: only runs committed
       strictly after T (a downstream job processes each unit exactly
       once by remembering the max ``committed_at`` it has consumed —
       CDC-style, no full rescan).
 
-    Both filters are metadata-only: they cut the manifest before the
-    semi-join, so unread units' chunk files are never opened.
+    Both filters are metadata-only: unread runs' chunk files are never
+    opened.
 
     ``committed_at`` is the writer's wall clock stamped between the chunk
     write and the manifest append, so as_of/after snapshots are exact for
@@ -442,16 +509,45 @@ def read_chunks(
     source instead (its offsets are the order-independent set of
     committed run_ids, immune to this).
     """
-    chunks = spark.read.parquet(_chunks_path(out_dir))
-    manifest = load_manifest(spark, out_dir)
-    if as_of is not None:
-        manifest = manifest.filter(F.col("committed_at") <= as_of)
-    if after is not None:
-        manifest = manifest.filter(F.col("committed_at") > after)
-    manifest = manifest.select("part_key", "salt", "run_id")
-    return chunks.join(
-        F.broadcast(manifest), ["part_key", "salt", "run_id"], "left_semi"
-    ).drop("run_id")
+    return _read_runs(spark, out_dir, _committed_runs(spark, out_dir, as_of, after))
+
+
+def _read_runs(spark, out_dir: str, runs: list[str]) -> DataFrame:
+    present = {st.getPath().getName() for st in _hadoop_list(spark, _chunks_path(out_dir))}
+    paths = [
+        f"{_chunks_path(out_dir)}/run_id={r}" for r in runs if f"run_id={r}" in present
+    ]
+    if not paths:
+        return spark.createDataFrame([], CHUNK_SPARK_SCHEMA)
+    return spark.read.schema(CHUNK_SPARK_SCHEMA).parquet(*paths)
+
+
+def _runs_schema(spark, out_dir: str, runs: list[str]) -> list[tuple[str, int, str]]:
+    """The committed runs' schema from their ``_schema-<run_id>.json``
+    sidecars, merged as the chunktable source merges them. A run written
+    before sidecars existed falls back to one data file: schema is
+    uniform within a run (one small job over that file's id columns)."""
+    from ..sources.chunk_datasource import _merge_schema_entries
+
+    sidecars, firsts = [], []
+    for rid in runs:
+        text = _hadoop_read_text(spark, _sidecar_path(out_dir, rid))
+        if text is not None:
+            sidecars.append(json.loads(text))
+            continue
+        files = sorted(
+            st.getPath().toString()
+            for st in _hadoop_list(spark, f"{_chunks_path(out_dir)}/run_id={rid}")
+            if st.isFile()
+        )
+        firsts += files[:1]
+    if firsts:
+        rows = (
+            spark.read.schema(CHUNK_SPARK_SCHEMA).parquet(*firsts)
+            .select("column", "col_idx", "dtype").distinct().collect()
+        )
+        sidecars += [{"columns": [r.asDict()]} for r in rows]
+    return _merge_schema_entries(sidecars)[0]
 
 
 def decode_checkpoint(
@@ -463,7 +559,8 @@ def decode_checkpoint(
     **decode_kwargs,
 ) -> DataFrame:
     """Decode a checkpointed chunk table, using the no-shuffle co-located
-    path when the file layout allows it.
+    path when the file layout allows it. The schema comes from the
+    committed runs' sidecars (no schema job).
 
     The encode tasks write whole chunks contiguously, so a checkpoint
     read is usually co-located — but Spark may split large files at
@@ -474,7 +571,10 @@ def decode_checkpoint(
     costs a scan of one id column; the win is not shuffling 100 TB."""
     from .decoder import check_colocated, decode
 
-    chunks = read_chunks(spark, out_dir, as_of=as_of, after=after)
+    runs = _committed_runs(spark, out_dir, as_of, after)
+    chunks = _read_runs(spark, out_dir, runs)
+    if decode_kwargs.get("schema_cols") is None:
+        decode_kwargs["schema_cols"] = _runs_schema(spark, out_dir, runs)
     colocated = decode_kwargs.pop("colocated", None)
     if colocated is None:
         colocated = check_colocated(chunks)
@@ -526,10 +626,7 @@ def vacuum_checkpoint(
     fs, root = _hadoop_path(spark, _chunks_path(out_dir))
     if not fs.exists(root):
         return {"orphan_runs": [], "deleted_runs": 0, "bytes_reclaimed": reclaimed}
-    committed = {
-        r["run_id"]
-        for r in load_manifest(spark, out_dir).select("run_id").distinct().collect()
-    }
+    committed = set(_run_commit_times(spark, out_dir))
     orphans: list[str] = []
     for status in fs.listStatus(root):
         name = status.getPath().getName()

@@ -40,6 +40,14 @@ calls without distinct uid_namespace values) are detected structurally:
 a chunk_id group spanning more than one (part_key, salt, seq) identity
 fails fast *before* any payload is decoded, even when the colliding
 chunks have disjoint column sets.
+
+Predicate pruning happens in the kernel too (``_decode(prune=...)``,
+the path behind ``predicate.filter_decode_pred``): the chunk's stats rows
+ride along in the scan, and right after the structural checks the
+kernel takes ``predicate.stats_verdict`` and drops a chunk no row of
+which can match — its payloads are never decoded, and no verdict job
+or semi-join runs ahead of the decode. Only the columns the kernel
+reads cross the Arrow pipe.
 """
 
 from __future__ import annotations
@@ -98,21 +106,35 @@ def _spark_schema(cols: list[tuple[str, int, str]]) -> T.StructType:
 
 
 _WORK_COLS = (
-    "column", "codec", "payload", "n_values", "part_key", "salt", "seq",
-    "chunk_id", "schema_fp",
+    "chunk_id", "col_idx", "column", "codec", "payload", "n_values",
+    "part_key", "salt", "seq", "schema_fp",
 )
+_DIGEST_COLS = ("member_hashes", "member_bloom", "trigram_bloom")
 
 
-def _make_decode_fn(cols: list[tuple[str, int, str]], nullable_ok: frozenset[str] = frozenset()):
+def _make_decode_fn(
+    cols: list[tuple[str, int, str]],
+    nullable_ok: frozenset[str] = frozenset(),
+    prune=None,
+):
+    """The decode kernel. ``prune`` = (lowered Pred, session time zone):
+    each chunk is then judged by ``predicate.stats_verdict`` after its
+    structural checks and skipped, undecoded, when no row can match."""
     names = [c for c, _, _ in cols]
     dtypes = {c: d for c, _, d in cols}
     arrow_schema = pa.schema([(c, typemap.spark_to_arrow(dtypes[c])) for c in names])
+    if prune is not None:
+        from .predicate import STAT_KEYS, referenced_columns, stats_verdict
 
-    def decode_group(rows: dict) -> pa.RecordBatch:
+        pred, tz = prune
+        refs = referenced_columns(pred)
+
+    def decode_group(rows: dict) -> pa.RecordBatch | None:
         cid = rows["chunk_id"][0]
-        # structural integrity first — before any payload is decoded:
-        # (1) one source chunk per chunk_id group (catches collisions even
-        # with disjoint column sets), (2) no duplicate column rows.
+        # structural integrity first — before any payload is decoded or
+        # any stats verdict is taken: (1) one source chunk per chunk_id
+        # group (catches collisions even with disjoint column sets),
+        # (2) no duplicate column rows.
         idents = set(zip(rows["part_key"], rows["salt"], rows["seq"]))
         if len(set(rows["schema_fp"])) > 1:
             raise ChunkDecodeError(
@@ -133,6 +155,14 @@ def _make_decode_fn(cols: list[tuple[str, int, str]], nullable_ok: frozenset[str
                 f"duplicate chunk-table rows: part_key={rows['part_key'][0]!r}"
                 f" chunk_id={cid} columns={dupes}"
             )
+        if prune is not None:
+            stats = {
+                col: {k: rows[k][i] for k in STAT_KEYS}
+                for i, col in enumerate(rows["column"])
+                if col in refs
+            }
+            if not stats_verdict(pred, stats, dtypes, tz)[0]:
+                return None  # no row of this chunk can match
         by_col = {}
         n_anchor: int | None = None
         for col, codec, payload, n_values, pk in zip(
@@ -146,7 +176,7 @@ def _make_decode_fn(cols: list[tuple[str, int, str]], nullable_ok: frozenset[str
                 n_anchor = n_values
                 continue
             try:
-                arr = decode_array(payload, dtypes[col], codec)
+                arr = decode_array(payload.as_py(), dtypes[col], codec)
             except Exception as e:  # noqa: BLE001 — re-raise with chunk context (O28)
                 raise ChunkDecodeError(
                     f"decode failed: part_key={pk!r} chunk_id={cid} column={col!r} codec={codec}: {e}"
@@ -183,31 +213,31 @@ def _make_decode_fn(cols: list[tuple[str, int, str]], nullable_ok: frozenset[str
         return pa.RecordBatch.from_arrays([by_col[c] for c in names], schema=arrow_schema)
 
     def decode_fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pending: dict = {}
+        # one chunk's rows are contiguous (sorted on chunk_id, col_idx);
+        # payloads stay Arrow scalars until their chunk is decoded, so a
+        # skipped chunk's payload bytes are never copied into Python
+        pending: dict | None = None
         cur_cid = None
-
-        def drain():
-            nonlocal pending
-            if pending:
-                out = decode_group(pending)
-                pending = {}
-                return out
-            return None
-
         for batch in batches:
-            tbl = pa.Table.from_batches([batch])
-            cids = tbl.column("chunk_id").to_pylist()
-            for i, cid in enumerate(cids):
-                if cid != cur_cid:
-                    out = drain()
-                    if out is not None:
-                        yield out
+            keys = batch.schema.names
+            cols = {
+                k: batch.column(k) if k == "payload" else batch.column(k).to_pylist()
+                for k in keys
+            }
+            for i, cid in enumerate(cols["chunk_id"]):
+                if pending is None or cid != cur_cid:
+                    if pending is not None:
+                        out = decode_group(pending)
+                        if out is not None:
+                            yield out
+                    pending = {k: [] for k in keys}
                     cur_cid = cid
-                for key in _WORK_COLS:
-                    pending.setdefault(key, []).append(tbl.column(key)[i].as_py())
-        out = drain()
-        if out is not None:
-            yield out
+                for k in keys:
+                    pending[k].append(cols[k][i])
+        if pending is not None:
+            out = decode_group(pending)
+            if out is not None:
+                yield out
 
     return decode_fn
 
@@ -291,6 +321,23 @@ def decode(
     the chunk table's discovered schema against a caller-declared one and
     fail fast on missing columns or dtype changes.
     """
+    return _decode(
+        chunks, columns, num_partitions, schema_cols, colocated, expected_schema
+    )
+
+
+def _decode(
+    chunks: DataFrame,
+    columns: list[str] | None = None,
+    num_partitions: int | None = None,
+    schema_cols: list[tuple[str, int, str]] | None = None,
+    colocated: bool = False,
+    expected_schema: "T.StructType | list[tuple[str, int, str]] | None" = None,
+    prune=None,
+) -> DataFrame:
+    """``decode`` plus an optional in-kernel chunk skip: ``prune`` =
+    (Pred with lowered literals, session time zone) — see
+    ``predicate.filter_decode_pred``."""
     spark = chunks.sparkSession
     if schema_cols is None:
         schema_cols = discover_schema(chunks)
@@ -318,6 +365,18 @@ def decode(
             )
         else:
             chunks = chunks.filter(F.col("column").isin(list(columns)))
+    # only what the kernel reads crosses the Arrow pipe; the stats rows
+    # ride along when the kernel judges chunks (tables persisted before a
+    # digest column existed read back without it: no digest, never prunes)
+    keep = list(_WORK_COLS)
+    if prune is not None:
+        keep += ["null_count", "min_val", "max_val"]
+        keep += [
+            F.col(c) if c in chunks.columns
+            else F.lit(None).cast("array<bigint>").alias(c)
+            for c in _DIGEST_COLS
+        ]
+    chunks = chunks.select(*keep)
 
     if colocated:
         # no shuffle: chunks already co-located per partition; the sort is
@@ -329,5 +388,5 @@ def decode(
             chunks.repartition(n_part, "chunk_id")
             .sortWithinPartitions("chunk_id", "col_idx")
         )
-    fn = _make_decode_fn(schema_cols, nullable_ok)
+    fn = _make_decode_fn(schema_cols, nullable_ok, prune)
     return work.mapInArrow(fn, schema=_spark_schema(schema_cols))

@@ -29,16 +29,36 @@ Soundness notes:
 * Truncated string minima are prefixes (lower bounds) of the true min;
   a truncated-needing max is stored as NULL. Every certain rule uses
   only the sound direction of those bounds (see engine/stats.py:45-69).
+
+Two evaluators implement these (possible, certain) rules, one per place
+a verdict is needed:
+
+* ``_eval_stats`` builds Catalyst Columns over a metadata frame. It
+  serves the driver-planned frames: ``chunk_verdicts``, ``prune_chunks``
+  (topk, the filtered aggregates, ``delete_where``) and
+  ``pushdown_stats_pred``.
+* ``stats_verdict`` is pure Python over one chunk's stats rows. It
+  serves code with no SparkSession: the decode kernel behind
+  ``filter_decode_pred`` skips chunks with it before decoding a payload,
+  and the ``chunktable`` data source prunes its files' chunks with it.
+  Literals are typed on the driver first (``lower_literals``), with the
+  same ``toInternal`` PySpark's ``F.lit`` uses, and compare under Spark's
+  coercion rules (an integer stat against a float literal compares as
+  double; NaN sorts above every double). tests/test_stats_verdict_property
+  checks that both evaluators agree on random trees and stats.
 """
 
 from __future__ import annotations
 
+import datetime as _dt
+import math
 import re
 
 from dataclasses import dataclass
-from functools import reduce
+from decimal import Decimal
+from functools import lru_cache, reduce
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from ..codecs import typemap
 from . import stats as stats_lib
@@ -874,6 +894,319 @@ def chunk_verdicts(
     )
 
 
+# ------------------------------------------------- the Python stats evaluator
+
+# the chunk-table columns stats_verdict reads from one (chunk, column) row
+STAT_KEYS = (
+    "null_count", "n_values", "min_val", "max_val",
+    "member_hashes", "member_bloom", "trigram_bloom",
+)
+_TS_DTYPES = ("timestamp", "timestamp_ntz")
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+_NA = object()  # a (literal, dtype) pairing the evaluator leaves unjudged
+
+
+@dataclass(frozen=True)
+class _Instant:
+    """A timestamp literal as Spark holds it: microseconds since the epoch."""
+    us: int
+
+
+@dataclass(frozen=True)
+class _Day:
+    """A date literal as Spark holds it: days since the epoch."""
+    days: int
+
+
+def lower_literals(pred: Pred, naive_is_wall_clock: bool = False) -> Pred:
+    """Driver side: date and datetime literals -> their internal ints.
+    A datetime converts with ``TimestampType.toInternal`` — what
+    ``F.lit`` sends, so a naive one reads in this process's local zone —
+    unless ``naive_is_wall_clock`` (data-source filters on a
+    timestamp_ntz column carry the naive wall clock; it then compares
+    with stats read in UTC)."""
+
+    def lit(v):
+        if isinstance(v, _dt.datetime):
+            if naive_is_wall_clock and v.tzinfo is None:
+                return _Instant(T.TimestampNTZType().toInternal(v))
+            return _Instant(T.TimestampType().toInternal(v))
+        if isinstance(v, _dt.date):
+            return _Day(T.DateType().toInternal(v))
+        return v
+
+    if isinstance(pred, Cmp):
+        return Cmp(pred.op, pred.column, lit(pred.value))
+    if isinstance(pred, IsIn):
+        return IsIn(pred.column, tuple(lit(v) for v in pred.values))
+    if isinstance(pred, (And, Or)):
+        return type(pred)(
+            lower_literals(pred.left, naive_is_wall_clock),
+            lower_literals(pred.right, naive_is_wall_clock),
+        )
+    if isinstance(pred, Not):
+        return Not(lower_literals(pred.child, naive_is_wall_clock))
+    return pred
+
+
+@lru_cache(maxsize=16)
+def _zone(tz: str) -> _dt.tzinfo | None:
+    """Spark session time zone id -> tzinfo, or None when unresolvable
+    (then timestamp_ntz stats stay unjudged — sound)."""
+    from zoneinfo import ZoneInfo
+
+    m = re.fullmatch(r"(?:UTC|GMT)?([+-])(\d{1,2}):?(\d{2})?", tz)
+    if m:
+        off = _dt.timedelta(hours=int(m.group(2)), minutes=int(m.group(3) or 0))
+        return _dt.timezone(-off if m.group(1) == "-" else off)
+    try:
+        return ZoneInfo("UTC" if tz == "Z" else tz)
+    except (ValueError, KeyError, OSError):
+        return None
+
+
+def _stat_value(s: str | None, dtype: str, zone):
+    """Stored stat string -> the value ``_typed``'s cast yields (None =
+    unbounded). A naive timestamp stat reads as wall clock in ``zone``,
+    as Spark's string-to-timestamp cast does in the session zone."""
+    if s is None:
+        return None
+    if dtype in typemap.INT_DTYPES or dtype == "boolean":
+        return int(s)
+    if dtype in typemap.FLOAT_DTYPES:
+        return float(s)
+    if typemap.is_decimal(dtype):
+        return Decimal(s)
+    if dtype == "date":
+        return T.DateType().toInternal(_dt.date.fromisoformat(s))
+    if dtype in _TS_DTYPES:
+        t = _dt.datetime.fromisoformat(s)
+        if t.tzinfo is None:
+            if zone is None:
+                return _NA
+            t = t.replace(tzinfo=zone)
+        return (t - _EPOCH) // _dt.timedelta(microseconds=1)
+    return s
+
+
+def _lit_value(v, dtype: str):
+    """A literal in the stats domain of ``dtype``, or _NA where Spark
+    would coerce the pair in a way this evaluator does not model."""
+    if isinstance(v, bool):
+        return int(v) if dtype == "boolean" else _NA
+    if isinstance(v, _Instant):
+        return v.us if dtype in _TS_DTYPES else _NA
+    if isinstance(v, _Day):
+        return v.days if dtype == "date" else _NA
+    if isinstance(v, str):
+        return v if dtype == "string" else _NA
+    numeric = dtype in _NUMERIC or dtype == "boolean" or typemap.is_decimal(dtype)
+    if numeric and isinstance(v, (int, float, Decimal)):
+        return v
+    return _NA
+
+
+def _order_key(x):
+    """Spark's total order on doubles: NaN sorts above every value."""
+    return (1, 0.0) if isinstance(x, float) and math.isnan(x) else (0, x)
+
+
+def _compare(a, op: str, b) -> bool:
+    """``a op b`` for a present stat ``a`` and a literal ``b`` of one
+    domain: a float on either side compares both as double (Spark widens
+    bigint and decimal to double against a double)."""
+    if isinstance(a, float) != isinstance(b, float):
+        a, b = float(a), float(b)
+    ka, kb = _order_key(a), _order_key(b)
+    return {
+        "gt": ka > kb, "ge": ka >= kb, "lt": ka < kb, "le": ka <= kb, "eq": ka == kb,
+    }[op]
+
+
+def _bloom_admits(words, h: int) -> bool:
+    """Python twin of ``bloom_hit_expr``: every probed bit set."""
+    w = stats_lib._BLOOM_BITS_PER_WORD
+    return all(words[p // w] >> (p % w) & 1 for p in stats_lib.bloom_positions(h))
+
+
+def _py_never_null(pred: Pred, stats: dict) -> bool:
+    """Python twin of ``_never_null``."""
+    if isinstance(pred, (IsNull, NotNull)):
+        return True
+    if isinstance(pred, IsIn) and None in pred.values:
+        return False
+    if isinstance(pred, (And, Or)):
+        return _py_never_null(pred.left, stats) and _py_never_null(pred.right, stats)
+    if isinstance(pred, Not):
+        return _py_never_null(pred.child, stats)
+    st = stats.get(pred.column)
+    return st is not None and st["null_count"] == 0
+
+
+def stats_verdict(
+    pred: Pred, stats: dict, dtypes: dict[str, str], tz: str = "UTC"
+) -> tuple[bool, bool]:
+    """(possible, certain) of ``pred`` for one chunk, in pure Python: the
+    twin of ``_eval_stats`` for code with no SparkSession. ``stats`` maps
+    each column to its chunk-table row's ``STAT_KEYS`` fields; a column
+    with no row (schema evolution) leaves its leaves unjudged
+    (possible, never certain). Literals must be lowered on the driver
+    (``lower_literals``); ``tz`` is the session zone naive timestamp
+    stats are read in."""
+    return _py_eval(pred, stats, dtypes, _zone(tz))
+
+
+def _py_eval(pred: Pred, stats: dict, dtypes: dict, zone) -> tuple[bool, bool]:
+    if isinstance(pred, And):
+        pl, cl = _py_eval(pred.left, stats, dtypes, zone)
+        pr, cr = _py_eval(pred.right, stats, dtypes, zone)
+        return pl and pr, cl and cr
+    if isinstance(pred, Or):
+        pl, cl = _py_eval(pred.left, stats, dtypes, zone)
+        pr, cr = _py_eval(pred.right, stats, dtypes, zone)
+        return pl or pr, cl or cr
+    if isinstance(pred, Not):
+        pc, cc = _py_eval(pred.child, stats, dtypes, zone)
+        return not cc, not pc and _py_never_null(pred.child, stats)
+    st = stats.get(pred.column)
+    if st is None:
+        return True, False
+    dtype = dtypes[pred.column]
+    nc, nv = st["null_count"], st["n_values"]
+    has_non_null, no_nulls = nc < nv, nc == 0
+    if isinstance(pred, IsNull):
+        return nc > 0, nc == nv
+    if isinstance(pred, NotNull):
+        return has_non_null, no_nulls
+    if isinstance(pred, Cmp):
+        return _py_cmp(pred, st, dtype, zone)
+    if isinstance(pred, IsIn):
+        if len(pred.values) > _ISIN_EXPAND_MAX:
+            return _py_large_isin(pred, st, dtype, zone)
+        parts = [
+            _py_cmp(Cmp("eq", pred.column, v), st, dtype, zone)
+            for v in pred.values
+            if v is not None
+        ]
+        return any(p for p, _ in parts), any(c for _, c in parts)
+    if isinstance(pred, Prefix):
+        return _py_prefix(pred.value, st, dtype, has_non_null, no_nulls)
+    if isinstance(pred, (Substr, Rlike)):
+        possible = has_non_null
+        if dtype != "string":
+            return possible, False
+        if isinstance(pred, Substr):
+            needles = [pred.value]
+        else:
+            prefix = rlike_prefix(pred.pattern)
+            if prefix is not None:
+                possible, _ = _py_prefix(prefix, st, dtype, has_non_null, no_nulls)
+            needles = rlike_literals(pred.pattern)
+        tg = st.get("trigram_bloom")
+        for needle in needles:
+            for h in stats_lib.trigram_hashes(needle) or ():
+                possible = possible and (tg is None or _bloom_admits(tg, h))
+        return possible, False
+    raise TypeError(f"not a Pred: {pred!r}")
+
+
+def _py_prefix(p: str, st: dict, dtype: str, has_non_null: bool, no_nulls: bool):
+    if dtype != "string":
+        return has_non_null, False
+    mn, mx = st["min_val"], st["max_val"]
+    possible = has_non_null and (mx is None or mx >= p)
+    certain = no_nulls and mn is not None and mn >= p
+    succ = prefix_successor(p)
+    if succ is not None:
+        possible = possible and (mn is None or mn < succ)
+        certain = certain and mx is not None and mx < succ
+    return possible, certain
+
+
+def _py_cmp(pred: Cmp, st: dict, dtype: str, zone) -> tuple[bool, bool]:
+    nc, nv = st["null_count"], st["n_values"]
+    has_non_null, no_nulls = nc < nv, nc == 0
+    v = _lit_value(pred.value, dtype)
+    mn, mx = _stat_value(st["min_val"], dtype, zone), _stat_value(st["max_val"], dtype, zone)
+    if v is _NA or mn is _NA or mx is _NA:
+        return has_non_null, False  # a NULL operand fails every comparison
+    op = pred.op
+
+    def cmp(a, o):  # a present stat against v
+        return _compare(a, o, v)
+
+    if op in ("gt", "ge"):
+        return (
+            has_non_null and (mx is None or cmp(mx, op)),
+            no_nulls and mn is not None and cmp(mn, op),
+        )
+    if op in ("lt", "le"):
+        return (
+            has_non_null and (mn is None or cmp(mn, op)),
+            no_nulls and mx is not None and cmp(mx, op),
+        )
+    all_eq = mn is not None and mx is not None and cmp(mn, "eq") and cmp(mx, "eq")
+    h = stats_lib.member_hash_for(pred.value, dtype)
+    mh, bl = st.get("member_hashes"), st.get("member_bloom")
+    if op == "eq":
+        possible = (
+            has_non_null
+            and (mn is None or cmp(mn, "le"))
+            and (mx is None or cmp(mx, "ge"))
+        )
+        if h is not None:
+            possible = (
+                possible
+                and (mh is None or h in mh)
+                and (bl is None or _bloom_admits(bl, h))
+            )
+        return possible, no_nulls and all_eq
+    if op == "ne":
+        certain = no_nulls and (
+            (mx is not None and cmp(mx, "lt")) or (mn is not None and cmp(mn, "gt"))
+        )
+        if h is not None:
+            certain = certain or (
+                no_nulls and mh is not None and h not in mh
+            ) or (no_nulls and bl is not None and not _bloom_admits(bl, h))
+        return has_non_null and not all_eq, certain
+    raise ValueError(op)  # pragma: no cover
+
+
+def _py_large_isin(pred: IsIn, st: dict, dtype: str, zone) -> tuple[bool, bool]:
+    """Python twin of ``materialize_large_isin`` for one chunk."""
+    vals = [v for v in pred.values if v is not None]
+    if not vals:
+        return False, False
+    nc, nv = st["null_count"], st["n_values"]
+    possible = nc < nv
+    lo, hi = _isin_envelope(vals, dtype)
+    if lo is not None:
+        mn = _stat_value(st["min_val"], dtype, zone)
+        mx = _stat_value(st["max_val"], dtype, zone)
+        lo_v, hi_v = _lit_value(lo, dtype), _lit_value(hi, dtype)
+        if _NA not in (mn, mx, lo_v, hi_v):
+            possible = (
+                possible
+                and (mn is None or _compare(mn, "le", hi_v))
+                and (mx is None or _compare(mx, "ge", lo_v))
+            )
+    hs = [stats_lib.member_hash_for(v, dtype) for v in vals]
+    mh = st.get("member_hashes")
+    if all(h is not None for h in hs) and mh is not None:
+        possible = possible and not set(hs).isdisjoint(mh)
+    canon = _canon_stat_strings(tuple(vals), dtype)
+    raw_mn, raw_mx = st["min_val"], st["max_val"]
+    certain = (
+        canon is not None
+        and raw_mn is not None
+        and raw_mn == raw_mx
+        and nc == 0
+        and raw_mn in set(canon)
+    )
+    return possible, certain
+
+
 def prune_chunks(
     chunks: DataFrame,
     pred: Pred,
@@ -900,15 +1233,34 @@ def filter_decode_pred(
 ) -> DataFrame:
     """Two-phase decode under an arbitrary predicate tree: stats-based
     chunk skip + exact recheck (the composed-algebra generalization of
-    filter_decode; O7-O16 over cross-column boolean trees)."""
-    from .decoder import decode, discover_schema
+    filter_decode; O7-O16 over cross-column boolean trees).
+
+    The skip runs inside the decode kernel: after a chunk's structural
+    checks (a chunk-id collision fails whatever the predicate), the
+    kernel evaluates ``stats_verdict`` over the chunk's stats rows of the
+    referenced columns — already in the scan, as those columns decode
+    for the recheck — and drops the chunk before decoding any payload.
+    So the whole query is the scan plus one Python stage, with no verdict
+    job and no semi-join. Scale cost: the old semi-join never reached
+    into the Parquet scan either, so pruned chunks' payloads were read
+    from disk before too; what is new is that the needed columns'
+    payloads of pruned chunks now cross the Arrow pipe into the kernel,
+    and with ``colocated=False`` they also cross the decode shuffle."""
+    from .decoder import _decode, discover_schema
 
     if schema_cols is None:
         schema_cols = discover_schema(chunks)
-    pruned = prune_chunks(chunks, pred, schema_cols)
+    dtypes = {c: d for c, _, d in schema_cols}
     refs = referenced_columns(pred)
+    unknown = sorted(c for c in refs if c not in dtypes)
+    if unknown:
+        raise ValueError(f"predicate references unknown columns: {unknown}")
     need = columns if columns is None else sorted(set(columns) | refs)
-    out = decode(pruned, columns=need, schema_cols=schema_cols, colocated=colocated)
+    tz = chunks.sparkSession.conf.get("spark.sql.session.timeZone")
+    out = _decode(
+        chunks, columns=need, schema_cols=schema_cols, colocated=colocated,
+        prune=(lower_literals(pred), tz),
+    )
     out = out.filter(to_spark(pred))
     if columns is not None and set(columns) != set(need):
         out = out.select(*[F.col(f"`{c}`") for c in columns])

@@ -12,14 +12,16 @@ pyspark.sql.datasource, Spark 4):
         .load("/data/enc")                       # decodes ONLY two columns
     src.write.format("chunktable").mode("append").save("/data/enc")
 
-``pushFilters`` receives Catalyst's translated filters, maps the
-supported shapes (=, <=>, <, <=, >, >=, IN, IS [NOT] NULL, NOT =, and
-LIKE-'p%' prefix matches as the [p, successor(p)) range) onto the
-engine's chunk-statistics interpretation, and RETURNS every filter as
-unsupported — Spark re-applies them exactly on the decoded rows, so the
-source only ever uses them to SKIP chunks (sound over-approximation, the
-same dual-predicate discipline as engine/predicate.py; ≙ the reference's
-coarse-filter + exact-recheck contract, Predicate.scala:47-183).
+``pushFilters`` receives Catalyst's translated filters, translates the
+supported shapes (=, <=>, <, <=, >, >=, IN, IS [NOT] NULL, NOT, and
+LIKE 'p%' / '%s%' / '%s') into one ``Pred`` tree, and RETURNS every
+filter as unsupported — Spark re-applies them exactly on the decoded
+rows, so the source only ever uses them to SKIP chunks. The verdict per
+chunk is the engine's own Python stats evaluator
+(``predicate.stats_verdict``, the one the decode kernel uses), so both
+read surfaces prune every stats-carrying dtype — decimal, date and
+timestamp included — by the same rules (≙ the reference's coarse-filter
++ exact-recheck contract, Predicate.scala:47-183).
 
 **Planning is metadata-only on the checkpoint layout.** Schema comes
 from the ``manifest/_schema-<run_id>.json`` sidecars the commit protocol
@@ -105,9 +107,15 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from ..codecs import decode_array, typemap
-from ..engine import stats as stats_mod
 from ..engine.checkpoint import MANIFEST_TMP_PREFIX, manifest_table
-from ..engine.predicate import prefix_successor
+from ..engine.predicate import (
+    STAT_KEYS,
+    Cmp,
+    P,
+    Pred,
+    lower_literals,
+    stats_verdict,
+)
 
 _META_COLS = [
     "chunk_id", "column", "col_idx", "dtype", "codec", "n_values",
@@ -502,192 +510,58 @@ def _discover_schema(
 # ---------------------------------------------------------- stats pruning
 
 
-def _typed(stat: str | None, dtype: str):
-    """Stored stat string -> comparable python value (None = unbounded)."""
-    if stat is None:
-        return None
-    if dtype in typemap.INT_DTYPES or dtype == "boolean":
-        return int(stat)
-    if dtype in typemap.FLOAT_DTYPES:
-        return float(stat)
-    if dtype == "string":
-        return stat
-    return None  # dtype outside the pruning contract
-
-
-def _canon(value, dtype: str):
-    """Literal -> the same comparable lane, or None (= no pruning, sound)."""
-    if dtype == "boolean":
-        return int(value) if isinstance(value, bool) else None
-    if dtype in typemap.INT_DTYPES:
-        return value if isinstance(value, int) and not isinstance(value, bool) else None
-    if dtype in typemap.FLOAT_DTYPES:
-        if isinstance(value, (int, float)) and not isinstance(value, bool):
-            return float(value)
-        return None
-    if dtype == "string":
-        return value if isinstance(value, str) else None
-    return None
-
-
-@dataclass(frozen=True)
-class _Leaf:
-    """One pruning leaf: op in (eq ne lt le gt ge prefix isnull notnull),
-    value."""
-    op: str
-    column: str
-    value: object = None
-
-
-def _leaf_possible(leaf: _Leaf, st: dict, dtype: str) -> bool:
-    """Sound 'some row may match' verdict from one chunk's stats row.
-    Any uncertainty returns True (keep the chunk)."""
-    nc, nv = st["null_count"], st["n_values"]
-    if leaf.op == "isnull":
-        return nc > 0
-    if leaf.op == "notnull":
-        return nc < nv
-    if nc >= nv:
-        return False  # only null rows: no comparison matches (SQL semantics)
-    if leaf.op == "prefix":
-        # col LIKE 'p%'  <=>  p <= col < successor(p). min_val may be a
-        # truncated (64-char) prefix of the true min — still a lower
-        # bound, so stored_min >= successor(p) proves true_min does too;
-        # max_val is exact whenever stored (over-long maxima are NULL =
-        # unbounded), so max < p proves no row reaches the prefix range.
-        if dtype != "string" or not isinstance(leaf.value, str) or not leaf.value:
-            return True
-        p = leaf.value
-        mn, mx = st["min_val"], st["max_val"]
-        if mx is not None and mx < p:
-            return False
-        succ = prefix_successor(p)
-        if succ is not None and mn is not None and mn >= succ:
-            return False
-        return True
-    if leaf.op in ("contains", "endswith"):
-        # substring position defeats [min,max]; the opt-in TRIGRAM digest
-        # (encode(trigram_cols=...)) is the skip lane: a match contains
-        # every 3-gram of the needle, so one provably-absent 3-gram skips
-        # the chunk (pg_trgm at chunk granularity; bloom FPs only keep)
-        if dtype != "string" or not isinstance(leaf.value, str):
-            return True
-        tg = st.get("trigram_bloom")
-        hs = stats_mod.trigram_hashes(leaf.value)
-        if tg is None or hs is None:
-            return True
-        for h in hs:
-            if not all(
-                tg[p // stats_mod._BLOOM_BITS_PER_WORD]
-                >> (p % stats_mod._BLOOM_BITS_PER_WORD)
-                & 1
-                for p in stats_mod.bloom_positions(h)
-            ):
-                return False
-        return True
-    v = _canon(leaf.value, dtype)
-    if v is None:
-        return True
-    mn, mx = _typed(st["min_val"], dtype), _typed(st["max_val"], dtype)
-    if leaf.op == "gt":
-        return mx is None or mx > v
-    if leaf.op == "ge":
-        return mx is None or mx >= v
-    if leaf.op == "lt":
-        return mn is None or mn < v
-    if leaf.op == "le":
-        return mn is None or mn <= v
-    if leaf.op == "eq":
-        if (mn is not None and mn > v) or (mx is not None and mx < v):
-            return False
-        h = stats_mod.member_hash_for(leaf.value, dtype)
-        if h is not None:
-            members = st.get("member_hashes")
-            if members is not None and h not in set(members):
-                return False  # exact digest proves absence
-            bloom = st.get("member_bloom")
-            if bloom is not None and not all(
-                bloom[p // stats_mod._BLOOM_BITS_PER_WORD]
-                >> (p % stats_mod._BLOOM_BITS_PER_WORD)
-                & 1
-                for p in stats_mod.bloom_positions(h)
-            ):
-                return False  # bloom proves absence (no false negatives)
-        return True
-    if leaf.op == "ne":
-        # impossible only when every non-null row equals v
-        return not (mn is not None and mx is not None and mn == mx == v)
-    return True
-
-
-class _Node:
-    """Tiny pruning tree: leaves + and/or (NOT handled at translation)."""
-
-    def __init__(self, kind: str, children=None, leaf: _Leaf | None = None):
-        self.kind, self.children, self.leaf = kind, children or [], leaf
-
-    def possible(self, stats_by_col: dict, dtypes: dict) -> bool:
-        if self.kind == "leaf":
-            st = stats_by_col.get(self.leaf.column)
-            if st is None:
-                return True  # column row absent (evolution) — keep
-            return _leaf_possible(self.leaf, st, dtypes[self.leaf.column])
-        if self.kind == "and":
-            return all(c.possible(stats_by_col, dtypes) for c in self.children)
-        return any(c.possible(stats_by_col, dtypes) for c in self.children)
-
-
 def _attr(f) -> str | None:
     parts = tuple(f.attribute)
     return parts[0] if len(parts) == 1 else None
 
 
-def _translate(filters: list[Filter]) -> "_Node | None":
-    """Spark data-source filters (implicitly ANDed) -> pruning tree.
-    Unsupported shapes are simply not used for pruning (sound — Spark
-    re-applies every filter on the decoded rows regardless)."""
-    leaves: list[_Node] = []
-    for f in filters:
-        if isinstance(f, EqualTo) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("eq", _attr(f), f.value)))
-        elif isinstance(f, Not) and isinstance(f.child, EqualTo) and _attr(f.child):
-            leaves.append(_Node("leaf", leaf=_Leaf("ne", _attr(f.child), f.child.value)))
-        elif isinstance(f, GreaterThan) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("gt", _attr(f), f.value)))
-        elif isinstance(f, GreaterThanOrEqual) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("ge", _attr(f), f.value)))
-        elif isinstance(f, LessThan) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("lt", _attr(f), f.value)))
-        elif isinstance(f, LessThanOrEqual) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("le", _attr(f), f.value)))
-        elif isinstance(f, In) and _attr(f):
-            ors = [
-                _Node("leaf", leaf=_Leaf("eq", _attr(f), v)) for v in f.value
-            ]
-            if ors:
-                leaves.append(_Node("or", children=ors))
-        elif isinstance(f, IsNull) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("isnull", _attr(f))))
-        elif isinstance(f, IsNotNull) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("notnull", _attr(f))))
-        elif isinstance(f, StringStartsWith) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("prefix", _attr(f), f.value)))
-        elif isinstance(f, StringContains) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("contains", _attr(f), f.value)))
-        elif isinstance(f, StringEndsWith) and _attr(f):
-            leaves.append(_Node("leaf", leaf=_Leaf("endswith", _attr(f), f.value)))
-        elif isinstance(f, EqualNullSafe) and _attr(f):
-            # col <=> NULL is IS NULL; with a non-null literal it matches
-            # exactly the rows plain equality matches (nulls fail both)
-            leaves.append(
-                _Node("leaf", leaf=_Leaf("isnull", _attr(f)))
-                if f.value is None
-                else _Node("leaf", leaf=_Leaf("eq", _attr(f), f.value))
-            )
-        # anything else: no pruning contribution
-    if not leaves:
+_CMP_FILTERS = {
+    GreaterThan: "gt", GreaterThanOrEqual: "ge", LessThan: "lt", LessThanOrEqual: "le",
+}
+
+
+def _filter_pred(f: Filter) -> "Pred | None":
+    """One Spark data-source filter -> Pred, or None when its shape is
+    not used for pruning."""
+    if isinstance(f, Not):
+        if isinstance(f.child, EqualTo) and _attr(f.child):
+            return P.ne(_attr(f.child), f.child.value)
+        child = _filter_pred(f.child)
+        return None if child is None else ~child
+    c = _attr(f)
+    if c is None:
         return None
-    return _Node("and", children=leaves) if len(leaves) > 1 else leaves[0]
+    if isinstance(f, (EqualTo, EqualNullSafe)):
+        # col <=> NULL is IS NULL; with a non-null literal it matches
+        # exactly the rows plain equality matches (nulls fail both)
+        return P.eq(c, f.value)
+    if type(f) in _CMP_FILTERS:
+        return Cmp(_CMP_FILTERS[type(f)], c, f.value)
+    if isinstance(f, In):
+        return P.isin(c, f.value)
+    if isinstance(f, IsNull):
+        return P.is_null(c)
+    if isinstance(f, IsNotNull):
+        return P.not_null(c)
+    if isinstance(f, StringStartsWith):
+        return P.startswith(c, f.value)
+    if isinstance(f, StringContains):
+        return P.contains(c, f.value)
+    if isinstance(f, StringEndsWith):
+        return P.endswith(c, f.value)
+    return None
+
+
+def _translate(filters: list[Filter]) -> "Pred | None":
+    """Spark data-source filters (implicitly ANDed) -> one Pred for
+    ``predicate.stats_verdict``, literals lowered here on the driver
+    (a timestamp_ntz filter carries the naive wall clock). Unsupported
+    shapes are simply not used for pruning (sound — Spark re-applies
+    every filter on the decoded rows regardless)."""
+    preds = [p for p in map(_filter_pred, filters) if p is not None]
+    if not preds:
+        return None
+    return lower_literals(P.and_(*preds), naive_is_wall_clock=True)
 
 
 # ------------------------------------------------------------- the source
@@ -701,7 +575,7 @@ class _FilePartition(InputPartition):
 def _read_file(
     path: str,
     schema_cols: list[tuple[str, int, str]],
-    prune: "_Node | None",
+    prune: "Pred | None",
     requested: list[str] | None = None,
     nullable: dict[str, bool] | None = None,
 ) -> Iterator[pa.RecordBatch]:
@@ -783,16 +657,9 @@ def _read_file(
         rows = {meta["column"][i]: i for i in idxs}
         if prune is not None:
             stats_by_col = {
-                meta["column"][i]: {
-                    k: meta[k][i]
-                    for k in (
-                        "null_count", "n_values", "min_val", "max_val",
-                        "member_hashes", "member_bloom", "trigram_bloom",
-                    )
-                }
-                for i in idxs
+                meta["column"][i]: {k: meta[k][i] for k in STAT_KEYS} for i in idxs
             }
-            if not prune.possible(stats_by_col, dtypes):
+            if not stats_verdict(prune, stats_by_col, dtypes)[0]:
                 continue  # chunk skipped from stats alone
         missing = [c for c in decode_cols if c not in rows]
         if missing:
@@ -836,7 +703,7 @@ class ChunkTableReader(DataSourceReader):
         self._nullable = nullable
         self._as_of = as_of
         self._after = after
-        self._prune: _Node | None = None
+        self._prune: Pred | None = None
 
     def pushFilters(self, filters: list[Filter]) -> Iterator[Filter]:
         self._prune = _translate(filters)

@@ -10,12 +10,15 @@ from pyspark.sql import functions as F
 
 import parquet_extra_spark as pes
 from parquet_extra_spark.sources import ChunkTableDataSource
-from parquet_extra_spark.sources.chunk_datasource import (
-    _Leaf,
-    _leaf_possible,
-    _translate,
-)
+from parquet_extra_spark.engine.predicate import Cmp, P, stats_verdict
+from parquet_extra_spark.sources.chunk_datasource import _translate
 from pyspark.sql.datasource import EqualTo, GreaterThan, In, Not
+
+
+def _possible(pred, st, dtype):
+    """The Python stats evaluator's possible verdict for a one-column
+    predicate over one chunk's stats row."""
+    return stats_verdict(pred, {pred.column: st}, {pred.column: dtype})[0]
 
 
 @pytest.fixture(scope="module")
@@ -109,21 +112,21 @@ def test_leaf_possible_skips_and_keeps():
         "null_count": 0, "n_values": 100, "min_val": "10", "max_val": "20",
         "member_hashes": None, "member_bloom": None,
     }
-    assert not _leaf_possible(_Leaf("gt", "x", 20), st, "bigint")
-    assert _leaf_possible(_Leaf("gt", "x", 19), st, "bigint")
-    assert not _leaf_possible(_Leaf("eq", "x", 5), st, "bigint")
-    assert _leaf_possible(_Leaf("eq", "x", 15), st, "bigint")
-    assert not _leaf_possible(_Leaf("lt", "x", 10), st, "bigint")
-    assert _leaf_possible(_Leaf("le", "x", 10), st, "bigint")
+    assert not _possible(Cmp("gt", "x", 20), st, "bigint")
+    assert _possible(Cmp("gt", "x", 19), st, "bigint")
+    assert not _possible(Cmp("eq", "x", 5), st, "bigint")
+    assert _possible(Cmp("eq", "x", 15), st, "bigint")
+    assert not _possible(Cmp("lt", "x", 10), st, "bigint")
+    assert _possible(Cmp("le", "x", 10), st, "bigint")
     # all-null chunk: no comparison matches, but IS NULL does
     allnull = dict(st, null_count=100, min_val=None, max_val=None)
-    assert not _leaf_possible(_Leaf("eq", "x", 15), allnull, "bigint")
-    assert _leaf_possible(_Leaf("isnull", "x"), allnull, "bigint")
-    assert not _leaf_possible(_Leaf("notnull", "x"), allnull, "bigint")
+    assert not _possible(Cmp("eq", "x", 15), allnull, "bigint")
+    assert _possible(P.is_null("x"), allnull, "bigint")
+    assert not _possible(P.not_null("x"), allnull, "bigint")
     # unknown bound keeps (sound); type-mismatched literal keeps (sound)
     nobound = dict(st, max_val=None)
-    assert _leaf_possible(_Leaf("gt", "x", 10**9), nobound, "bigint")
-    assert _leaf_possible(_Leaf("eq", "x", "str"), st, "bigint")
+    assert _possible(Cmp("gt", "x", 10**9), nobound, "bigint")
+    assert _possible(Cmp("eq", "x", "str"), st, "bigint")
 
 
 def test_member_digest_prunes_eq():
@@ -135,8 +138,8 @@ def test_member_digest_prunes_eq():
         "member_bloom": None,
     }
     # range [a..z] admits "fr" but the exact digest proves it absent
-    assert not _leaf_possible(_Leaf("eq", "lang", "fr"), st, "string")
-    assert _leaf_possible(_Leaf("eq", "lang", "en"), st, "string")
+    assert not _possible(Cmp("eq", "lang", "fr"), st, "string")
+    assert _possible(Cmp("eq", "lang", "en"), st, "string")
 
 
 def test_prefix_pruning_leaf_and_behavior(registered, spark, tmp_path):
@@ -146,14 +149,14 @@ def test_prefix_pruning_leaf_and_behavior(registered, spark, tmp_path):
         "null_count": 0, "n_values": 10, "min_val": "cat", "max_val": "dog",
         "member_hashes": None, "member_bloom": None,
     }
-    assert _leaf_possible(_Leaf("prefix", "w", "c"), st, "string")
-    assert _leaf_possible(_Leaf("prefix", "w", "dog"), st, "string")
-    assert not _leaf_possible(_Leaf("prefix", "w", "b"), st, "string")   # max<p? no: min>=succ
-    assert not _leaf_possible(_Leaf("prefix", "w", "e"), st, "string")   # max < 'e'
+    assert _possible(P.startswith("w", "c"), st, "string")
+    assert _possible(P.startswith("w", "dog"), st, "string")
+    assert not _possible(P.startswith("w", "b"), st, "string")   # max<p? no: min>=succ
+    assert not _possible(P.startswith("w", "e"), st, "string")   # max < 'e'
     # truncated min is still a lower bound; NULL max = unbounded keeps
-    assert _leaf_possible(_Leaf("prefix", "w", "z"), dict(st, max_val=None), "string")
+    assert _possible(P.startswith("w", "z"), dict(st, max_val=None), "string")
     # non-string value/empty prefix: no pruning (sound)
-    assert _leaf_possible(_Leaf("prefix", "w", ""), st, "string")
+    assert _possible(P.startswith("w", ""), st, "string")
 
     out = str(tmp_path / "flat")
     df = spark.createDataFrame(
@@ -179,6 +182,37 @@ def test_prefix_pruning_leaf_and_behavior(registered, spark, tmp_path):
         registered.read.format("chunktable").load(out).collect()
 
 
+def test_decimal_date_timestamp_filters_prune(registered, spark, tmp_path):
+    """Decimal, date, timestamp and timestamp_ntz filters prune chunks on
+    the SQL surface: the chunks past the cut have a poisoned payload, so a
+    filtered read that touched one would fail."""
+    out = str(tmp_path / "typed")
+    df = spark.range(0, 1000, 1, 2).select(
+        F.col("id").alias("k"),
+        (F.col("id") / 4).cast("decimal(10,2)").alias("m"),
+        F.date_add(F.lit("2020-01-01").cast("date"), F.col("id").cast("int")).alias("d"),
+        F.timestamp_seconds(F.col("id") * 60).alias("ts"),
+        F.timestamp_seconds(F.col("id") * 60).cast("timestamp_ntz").alias("tsn"),
+    )
+    chunks = pes.encode(df, partition_cols=[], sort_cols=["k"], chunk_rows=250,
+                        n_buckets=1, n_salts=1, unit_sort=True)
+    late = (F.col("column") == "k") & (F.col("min_val").cast("bigint") >= 500)
+    chunks.withColumn(
+        "payload", F.when(late, F.lit(b"\xde\xad")).otherwise(F.col("payload"))
+    ).write.parquet(out)
+    table = registered.read.format("chunktable").load(out)
+    for cond in (
+        "m < 100.00",
+        "d <= DATE '2020-03-01'",
+        "ts < TIMESTAMP '1970-01-01 06:00:00'",
+        "tsn < TIMESTAMP_NTZ '1970-01-01 06:00:00'",
+    ):
+        got = sorted(r["k"] for r in table.filter(cond).select("k").collect())
+        assert got and got[-1] < 500, cond
+    with pytest.raises(Exception):
+        registered.read.format("chunktable").load(out).collect()
+
+
 def test_translate_null_safe_eq():
     from pyspark.sql.datasource import EqualNullSafe
 
@@ -188,13 +222,13 @@ def test_translate_null_safe_eq():
     }
     dtypes = {"lang": "string"}
     node = _translate([EqualNullSafe(("lang",), "fr")])
-    assert not node.possible({"lang": st}, dtypes)  # fr > max 'en'
+    assert not stats_verdict(node, {"lang": st}, dtypes)[0]  # fr > max 'en'
     node = _translate([EqualNullSafe(("lang",), "en")])
-    assert node.possible({"lang": st}, dtypes)
+    assert stats_verdict(node, {"lang": st}, dtypes)[0]
     # <=> NULL means IS NULL: prunable on null_count
     node = _translate([EqualNullSafe(("lang",), None)])
-    assert not node.possible({"lang": st}, dtypes)
-    assert node.possible({"lang": dict(st, null_count=3)}, dtypes)
+    assert not stats_verdict(node, {"lang": st}, dtypes)[0]
+    assert stats_verdict(node, {"lang": dict(st, null_count=3)}, dtypes)[0]
 
 
 def test_translate_shapes():
@@ -217,13 +251,13 @@ def test_translate_shapes():
     dtypes = {"lang": "string", "n_chars": "bigint", "source": "string"}
     # n_chars max 5 < 10 -> the AND tree is impossible for this chunk
     stats = {"lang": st_en, "n_chars": st_n, "source": st_en}
-    assert not node.possible(stats, dtypes)
+    assert not stats_verdict(node, stats, dtypes)[0]
     stats["n_chars"] = dict(st_n, max_val="50")
     # lang == en possible, ne 'xx' possible, source IN impossible? min=max='en'
     # -> source IN ('a','b') prunes it
-    assert not node.possible(stats, dtypes)
+    assert not stats_verdict(node, stats, dtypes)[0]
     stats["source"] = dict(st_en, min_val="a", max_val="b")
-    assert node.possible(stats, dtypes)
+    assert stats_verdict(node, stats, dtypes)[0]
 
 
 def test_schema_plans_from_manifest_sidecar_only(registered, spark, docs, tmp_path):

@@ -141,6 +141,13 @@ def test_timestamp_roundtrip(codec):
     rt(pa.array(vals, type=pa.timestamp("us")), "timestamp_ntz", codec)
 
 
+@pytest.mark.parametrize("codec", INT_CODECS)
+def test_date_roundtrip(codec):
+    base = datetime.date(2020, 1, 1)
+    vals = [base + datetime.timedelta(days=i // 3) for i in range(50)] + [None]
+    rt(pa.array(vals, type=pa.date32()), "date", codec)
+
+
 @pytest.mark.parametrize("codec", ["dict", "rle", "raw"])
 def test_bool_roundtrip(codec):
     rt(pa.array([True, False, None] * 30), "boolean", codec)

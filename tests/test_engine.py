@@ -347,6 +347,85 @@ def test_encode_to_fresh_commit_job_budget(spark, corpus, tmp_path):
         assert total <= write + 2, (lane, write, total)
 
 
+def test_encode_to_resume_job_budget(spark, corpus, tmp_path):
+    """A full resume builds the done-unit side from the units it already
+    collected: the manifest is read once (one job), then the rows-skipped
+    count and the (empty) chunk write; the summary is unchanged."""
+    for lane in ({"n_salts": 2}, {"assume_clustered": True}):
+        kw = dict(_CKPT_KW, **lane)
+        out = str(tmp_path / ("c" if lane.get("assume_clustered") else "d"))
+        fresh = pes.encode_to(corpus, out, **kw)
+        got = []
+        total = _jobs_of(spark, lambda: got.append(pes.encode_to(corpus, out, **kw)))
+        assert total <= 8, (lane, total)
+        (resumed,) = got
+        assert resumed["rows_skipped_resume"] == corpus.count()
+        assert {k: resumed[k] for k in ("units_total", "raw_bytes", "encoded_bytes")} == {
+            k: fresh[k] for k in ("units_total", "raw_bytes", "encoded_bytes")
+        }
+
+
+def test_checkpoint_query_job_budget(spark, tmp_path):
+    """A checkpoint query is one scan plus one Python stage. read_chunks
+    plans on the driver from the manifest: no job, with or without
+    as_of/after, and an orphan run stays invisible. filter_decode_pred
+    prunes inside the decode kernel, so a count+sum over it runs at most
+    2 jobs, with the answers of a plain Spark filter. decode_checkpoint
+    takes its schema from the sidecars: no job before the action."""
+    import datetime as dt
+
+    df = spark.range(0, 6000, 1, 4).select(
+        (F.col("id") % 211).alias("k"),
+        (F.col("id") % 5).cast("string").alias("s"),
+        F.timestamp_seconds(F.col("id") * 3600).cast("timestamp_ntz").alias("ts"),
+    ).cache()
+    out = str(tmp_path / "q")
+    kw = dict(partition_cols=["s"], sort_cols=["ts"], chunk_rows=256, n_buckets=2,
+              n_salts=1, unit_sort=True)
+    first = pes.encode_to(df.filter("k < 100"), out, dataset_id="a", **kw)
+    pes.encode_to(df.filter("k >= 100"), out, dataset_id="b", **kw)
+    cut = (
+        pes.load_manifest(spark, out).filter(F.col("run_id") == first["run_id"])
+        .agg(F.max("committed_at")).collect()[0][0]
+    )
+    (
+        pes.encode(df, **kw).withColumn("run_id", F.lit("deadrun"))
+        .write.mode("append").partitionBy("run_id").parquet(f"{out}/chunks")
+    )
+    schema_cols = pes.schema_from_struct(df.schema)
+
+    def count_k(frame):
+        return tuple(frame.agg(F.count("*"), F.sum("k")).collect()[0])
+
+    for snap, cond in (({}, F.lit(True)), ({"as_of": cut}, F.col("k") < 100),
+                       ({"after": cut}, F.col("k") >= 100)):
+        got = []
+        assert _jobs_of(spark, lambda: got.append(pes.read_chunks(spark, out, **snap))) == 0
+        dec = pes.decode(got[0], schema_cols=schema_cols, colocated=True)
+        assert count_k(dec) == count_k(df.filter(cond)), snap
+
+    lo, hi = dt.datetime(1970, 3, 1), dt.datetime(1970, 4, 1, 12)
+    for pred, cond in (
+        (pes.P.eq("k", 17), F.col("k") == 17),
+        (pes.P.ge("ts", lo) & pes.P.le("ts", hi), F.col("ts").between(lo, hi)),
+        (pes.P.isin("k", [3, 150, 7]), F.col("k").isin([3, 150, 7])),
+    ):
+        got = []
+        jobs = _jobs_of(spark, lambda: got.append(count_k(pes.filter_decode_pred(
+            pes.read_chunks(spark, out), pred, schema_cols=schema_cols, colocated=True,
+        ))))
+        assert jobs <= 2, (pred, jobs)
+        assert got[0] == count_k(df.filter(cond)), pred
+
+    got = []
+    assert _jobs_of(spark, lambda: got.append(
+        pes.decode_checkpoint(spark, out, colocated=True))) == 0
+    assert count_k(got[0]) == count_k(df)
+    jobs = _jobs_of(spark, lambda: got.append(count_k(pes.decode_checkpoint(spark, out))))
+    assert jobs <= 6 and got[-1] == count_k(df), jobs
+    df.unpersist()
+
+
 def _manifest_totals(spark, out):
     m = pes.load_manifest(spark, out)
     return tuple(m.agg(F.count("*"), F.sum("raw_bytes"), F.sum("encoded_bytes")).collect()[0])
