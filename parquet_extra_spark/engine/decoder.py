@@ -58,6 +58,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..codecs import decode_array, typemap
+from .worker import kernel
 
 
 class ChunkDecodeError(RuntimeError):
@@ -389,4 +390,4 @@ def _decode(
             .sortWithinPartitions("chunk_id", "col_idx")
         )
     fn = _make_decode_fn(schema_cols, nullable_ok, prune)
-    return work.mapInArrow(fn, schema=_spark_schema(schema_cols))
+    return work.mapInArrow(kernel(fn), schema=_spark_schema(schema_cols))

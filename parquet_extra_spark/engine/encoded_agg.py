@@ -52,6 +52,7 @@ from ..codecs.dictionary import _decode_dict_values, _dv_dtype
 from .decoder import discover_schema
 from .encoded_filter import row_mask
 from .predicate import Pred, prune_chunks, referenced_columns
+from .worker import kernel
 
 
 def _dtype_map(
@@ -211,7 +212,7 @@ def value_counts_encoded(
                     [values, pa.array(counts, type=pa.int64())], ["value", "cnt"]
                 )
 
-    partials = work.mapInArrow(fn, schema=f"value {dtype}, cnt bigint")
+    partials = work.mapInArrow(kernel(fn), schema=f"value {dtype}, cnt bigint")
     return partials.groupBy("value").agg(F.sum("cnt").alias("cnt"))
 
 
@@ -271,7 +272,7 @@ def distinct_encoded(
             if len(values):
                 yield pa.RecordBatch.from_arrays([values], ["value"])
 
-    return work.mapInArrow(fn, schema=f"value {dtype}").distinct()
+    return work.mapInArrow(kernel(fn), schema=f"value {dtype}").distinct()
 
 
 def _distinct_multi(
@@ -643,7 +644,7 @@ def _chunk_pass(
             return emit(group, _build_mask(group, where, dtypes, cache), cache)
 
         return _pair_work(pruned, need, colocated).mapInArrow(
-            lambda batches: _pair_stream(batches, per_chunk), schema=schema
+            kernel(lambda batches: _pair_stream(batches, per_chunk)), schema=schema
         )
 
     return dtypes, run

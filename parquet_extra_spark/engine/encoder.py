@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..codecs import typemap
 from . import stats as stats_mod
 from .chunk import CHUNK_ARROW_SCHEMA, CHUNK_SPARK_SCHEMA, chunk_uid, schema_fingerprint
+from .worker import kernel
 
 class ChunkEncodeError(RuntimeError):
     """Write-side contract violation (required-field null, etc.)."""
@@ -679,4 +680,4 @@ def encode(
                          bloom_cols={s_of[c] for c in bloom_set} or None,
                          trigram_cols={s_of[c] for c in trigram_set} or None,
                          per_task_uid=assume_clustered)
-    return work.mapInArrow(fn, schema=CHUNK_SPARK_SCHEMA)
+    return work.mapInArrow(kernel(fn), schema=CHUNK_SPARK_SCHEMA)

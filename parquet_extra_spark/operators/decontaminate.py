@@ -47,6 +47,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from ..engine.worker import kernel
+
 DEFAULT_MAX_EVAL_NGRAMS = 50_000_000
 
 
@@ -186,7 +188,7 @@ def _set_probe_hits(
                 g = m.groupby("_id").size().reset_index(name="_n")
                 yield pd.DataFrame({"_id": g["_id"], "_n": g["_n"]})
 
-    per_part = probe.mapInPandas(_probe, out_schema)
+    per_part = probe.mapInPandas(kernel(_probe), out_schema)
     return per_part.groupBy("_id").agg(F.sum("_n").alias("n_hits")).select(
         F.col("_id").alias(id_col), "n_hits"
     )

@@ -25,6 +25,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
+from ..engine.worker import kernel
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -131,7 +133,7 @@ def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
                 }
             )
 
-    return media.mapInPandas(fn, schema=FEATURE_SCHEMA)
+    return media.mapInPandas(kernel(fn), schema=FEATURE_SCHEMA)
 
 
 def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
@@ -168,4 +170,4 @@ def resize_stub(media: DataFrame, width: int, height: int, fake: bool = True) ->
             yield pdf
 
     imgs = media.filter(F.col("kind") == "image")
-    return imgs.mapInPandas(fn, schema=MEDIA_SCHEMA)
+    return imgs.mapInPandas(kernel(fn), schema=MEDIA_SCHEMA)

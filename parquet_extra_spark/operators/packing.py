@@ -39,6 +39,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..engine.worker import task
+
 _BUCKET_SHIFT = 40  # local sequence counter fits in 40 bits per bucket
 
 
@@ -196,7 +198,7 @@ def pack_greedy(
         pdf["seq_tokens"] = totals.astype("int64")
         return pdf
 
-    packed = src.groupBy("_bucket").applyInPandas(_pack, out_schema)
+    packed = src.groupBy("_bucket").applyInPandas(task(_pack), out_schema)
     return packed.select(
         *df.columns,
         F.col("_bucket").alias("bucket"),

@@ -23,6 +23,17 @@ read surfaces prune every stats-carrying dtype — decimal, date and
 timestamp included — by the same rules (≙ the reference's coarse-filter
 + exact-recheck contract, Predicate.scala:47-183).
 
+**Reuse caveat (Spark 4.1, filter pushdown on).** Spark stores the read
+function of the last pushdown, pruning included, on the DataFrame's one
+``PythonDataSourceV2``. A later scan of that DataFrame with no pushable
+filter runs no Python planning and reuses it: after
+``t.filter("k < 100").count()``, ``t.count()`` skips the chunks the
+filter pruned, and a union of two differently filtered branches of ``t``
+prunes both by the last filter planned. No code of a Python data source
+runs for such a scan, so the source cannot detect it: load the table
+again for each unfiltered read or self-union
+(``test_frame_reused_after_filtered_action_reads_every_row`` pins it).
+
 **Planning is metadata-only on the checkpoint layout.** Schema comes
 from the ``manifest/_schema-<run_id>.json`` sidecars the commit protocol
 writes (engine/checkpoint.encode_to and this module's writer): one tiny
@@ -116,6 +127,7 @@ from ..engine.predicate import (
     lower_literals,
     stats_verdict,
 )
+from ..engine.worker import kernel, task
 
 _META_COLS = [
     "chunk_id", "column", "col_idx", "dtype", "codec", "n_values",
@@ -717,6 +729,7 @@ class ChunkTableReader(DataSourceReader):
             for f in _committed_files(self._path, self._as_of, self._after)
         ]
 
+    @kernel
     def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
         return _read_file(
             partition.path,
@@ -827,6 +840,7 @@ class ChunkTableStreamReader(DataSourceStreamReader):
             for f in _run_files(self._root, new_runs, self._manifest)
         ]
 
+    @kernel
     def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
         return _read_file(partition.path, self._schema_cols, None)
 
@@ -987,6 +1001,7 @@ class ChunkTableArrowWriter(DataSourceArrowWriter):
         self._sort_cols = sort_cols
         self._dataset_id = dataset_id
 
+    @task
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _WriteMessage:
         from pyspark import TaskContext
 
@@ -1064,6 +1079,7 @@ class ChunkTableStreamArrowWriter(DataSourceStreamArrowWriter):
     def _batch_run_id(self, batchId: int) -> str:
         return f"sb-{self._sink_id}-{batchId:010d}"
 
+    @task
     def write(self, iterator: Iterator[pa.RecordBatch]) -> _WriteMessage:
         from pyspark import TaskContext
 

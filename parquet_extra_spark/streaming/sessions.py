@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..engine.worker import kernel
+
 
 def _agg_names(aggs: list[Column]) -> list[str]:
     # a Column carries its alias in the expression string: "expr AS alias"
@@ -122,7 +124,7 @@ def session_ids_stream(
                       int(session_n)))
 
     return stream_df.groupBy(key).applyInPandasWithState(
-        update,
+        kernel(update),
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",

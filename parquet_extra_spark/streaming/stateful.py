@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..engine.worker import kernel
+
 _OUT_SCHEMA = "key string, n_docs bigint, n_bytes bigint"
 _STATE_SCHEMA = "n_docs bigint, n_bytes bigint"
 
@@ -49,7 +51,7 @@ def running_totals_stream(
         )
 
     return stream_df.groupBy(key_col).applyInPandasWithState(
-        update,
+        kernel(update),
         outputStructType=_OUT_SCHEMA,
         stateStructType=_STATE_SCHEMA,
         outputMode="update",

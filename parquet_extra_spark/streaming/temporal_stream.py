@@ -31,6 +31,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..engine.worker import kernel
+
 _SIDE = "__side"
 _T = "__t"
 
@@ -223,7 +225,7 @@ def asof_enrich_stream(
         state.update(tuple(st))
 
     return unioned.groupBy(on).applyInPandasWithState(
-        update,
+        kernel(update),
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="update",

@@ -81,6 +81,27 @@ def test_checkpoint_layout_committed_only(registered, spark, docs, tmp_path):
     assert pes.roundtrip_ok(docs, got)
 
 
+@pytest.mark.xfail(
+    strict=True,
+    reason="Spark 4.1 keeps the last pushdown's read function on the shared"
+    " PythonDataSourceV2 and reuses it for a later scan that pushes no filter",
+)
+def test_frame_reused_after_filtered_action_reads_every_row(registered, spark, tmp_path):
+    """Pins an upstream defect: ``PythonScanBuilder.pushFilters`` stores
+    the pushdown's read info (the pickled reader, pruning included) on the
+    DataFrame's one ``PythonDataSourceV2``, and a scan with no pushable
+    filter runs no Python planning and reads that stored info. No code in
+    a Python data source runs for such a scan, so the source cannot tell
+    it apart. When Spark fixes this the test XPASSes and fails."""
+    out = str(tmp_path / "reuse")
+    spark.range(1000).selectExpr("id AS k").coalesce(1).write.format(
+        "chunktable"
+    ).option("chunk_rows", 250).mode("append").save(out)
+    t = registered.read.format("chunktable").load(out)
+    assert t.filter("k < 100").count() == 100
+    assert t.count() == 1000
+
+
 def test_pruning_actually_skips_chunks(registered, spark, tmp_path):
     """Behavioral proof: a chunk whose stats exclude the filter gets its
     payload CORRUPTED on disk; the filtered read still succeeds (the
